@@ -65,7 +65,6 @@ from webgraph_spark.algo.bfs import bfs_distances
 from webgraph_spark.algo.components import hash_min_components, renumber_by_size
 from webgraph_spark.algo.labelprop import label_propagation
 from webgraph_spark.algo.pagerank import (
-    pagerank,
     pagerank_edges,
     pagerank_weighted,
     personalized_pagerank,
@@ -867,7 +866,7 @@ def _run_block_kernel(spark, sf_dir, kernel_fn):
     before returning — repeated driver-query runs in one session must not
     accumulate cached blocks."""
     from webgraph_spark.plans.partitioning import symmetrize_for_join
-    from webgraph_spark.plans.slotform import unpersist_pair_slotform
+    from webgraph_spark.plans.blockvec import unpersist_pair_slotform
 
     e = _edges(spark, sf_dir)
     sym = symmetrize_for_join(e, "src").persist()
@@ -913,9 +912,8 @@ def _q_pagerank_edges(spark, sf_dir):
 
 
 def _q_pagerank_csr(spark, sf_dir):
-    """Block-vector CSR kernel (the scale path); the row-state kernel
-    (:func:`webgraph_spark.algo.pagerank.pagerank`) stays differential-
-    tested in pytest and `pagerank_edges` covers the join/agg plan here."""
+    """Block-vector CSR kernel (the scale path); `pagerank_edges` covers
+    the join/agg plan here."""
     e = _edges(spark, sf_dir)
     csr = build_csr(e, num_blocks=8)
     res = pagerank_block(spark, csr, _nodes(e), alpha=ALPHA, tol=0.0, max_iter=PR_ITERS)

@@ -42,6 +42,7 @@ from webgraph_spark.algo.pagerank_block import pagerank_block
 from webgraph_spark.algo.triangles import triangle_count_adjacency
 from webgraph_spark.functions.dedup import dedup_exact, minhash_lsh_pairs, simhash_pairs
 from webgraph_spark.functions.similarity import cosine_topk
+from webgraph_spark.plans.blockvec import unpersist_pair_slotform
 from webgraph_spark.plans.csr import build_csr, verify_accounting
 from webgraph_spark.session import get_spark
 
@@ -240,9 +241,7 @@ def _run_suite(spark, args, sf_dir):
     for cached in (edges, nodes, docs, emb):
         if cached is not None:
             cached.unpersist()
-    sf_cache = getattr(csr, "_slotform_cache", None)
-    if sf_cache is not None:
-        sf_cache[1].unpersist()
+    unpersist_pair_slotform(csr)
     return timings, extras
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from webgraph_spark.algo.components import hash_min_components, renumber_by_size
 from webgraph_spark.algo.labelprop import label_propagation
-from webgraph_spark.algo.pagerank import pagerank
+from webgraph_spark.algo.pagerank_block import pagerank_block
 from webgraph_spark.algo.triangles import triangle_count_adjacency
 from webgraph_spark.checkpoint import CheckpointManager
 from webgraph_spark.plans.csr import build_csr, compression_stats
@@ -80,7 +80,9 @@ def main() -> None:
 
     ckpt = CheckpointManager(spark, f"{args.out}/ckpt")
     ids = nodes.select("id")
-    pr = pagerank(spark, csr, ids, tol=1e-9, max_iter=args.pr_iters, checkpointer=ckpt)
+    pr = pagerank_block(
+        spark, csr, ids, tol=1e-9, max_iter=args.pr_iters, checkpointer=ckpt
+    )
     report["pagerank"] = {
         "iterations": pr.iterations,
         "converged": pr.converged,

@@ -10,7 +10,7 @@ import numpy as np
 
 from tests.oracles import er_arcs
 from webgraph_spark.algo.components import hash_min_components
-from webgraph_spark.algo.pagerank import pagerank
+from webgraph_spark.algo.pagerank_block import pagerank_block
 from webgraph_spark.checkpoint import CheckpointManager, partition_lineage
 from webgraph_spark.plans.csr import build_csr
 
@@ -31,41 +31,6 @@ def test_lineage_accounting(spark, tmp_path):
     assert sorted(lin["checksum"]) == sorted(lin2["checksum"])
 
 
-def test_pagerank_checkpoint_and_resume(spark, tmp_path):
-    n = 80
-    arcs = er_arcs(n, 0.05, 4)
-    edges = spark.createDataFrame(arcs, "src long, dst long")
-    nodes = spark.range(n).selectExpr("id")
-    csr = build_csr(edges, num_blocks=3)
-
-    # Uninterrupted run.
-    full = pagerank(spark, csr, nodes, tol=1e-10, max_iter=60)
-    assert full.converged
-
-    # Interrupted run: stop after 5 iterations (simulated kill), resume.
-    ck_root = str(tmp_path / "ck")
-    ck = CheckpointManager(spark, ck_root, run_id="r1")
-    pagerank(spark, csr, nodes, tol=1e-10, max_iter=5, checkpointer=ck)
-    last = ck.latest_iteration()
-    assert last == 5
-    state = ck.load_iteration(last)
-    ck2 = CheckpointManager(spark, ck_root, run_id="r2")
-    resumed = pagerank(
-        spark, csr, nodes, tol=1e-10, max_iter=60,
-        checkpointer=ck2, initial_ranks=state, start_iteration=last,
-    )
-    assert resumed.converged
-    assert np.allclose(_vec(full.ranks, n), _vec(resumed.ranks, n), atol=1e-12)
-
-    # Lineage: every iteration accounted, n rows each, wall time recorded.
-    lin = ck.lineage()
-    per_iter = lin.groupby("iteration")["row_count"].sum()
-    assert (per_iter == n).all()
-    assert (lin["wall_ms"] > 0).all()
-    assert {"run_id", "iteration", "partition_id", "row_count", "checksum",
-            "wall_ms", "delta"} <= set(lin.columns)
-
-
 def test_cc_resume_exact(spark, tmp_path):
     arcs = [(i, i + 1) for i in range(40)]
     edges = spark.createDataFrame(arcs, "src long, dst long")
@@ -81,9 +46,43 @@ def test_cc_resume_exact(spark, tmp_path):
     assert a == b
 
 
-def test_pagerank_block_resume_allclose(spark, tmp_path):
-    from webgraph_spark.algo.pagerank_block import pagerank_block
+def test_pagerank_checkpoint_and_resume(spark, tmp_path):
+    n = 80
+    arcs = er_arcs(n, 0.05, 4)
+    edges = spark.createDataFrame(arcs, "src long, dst long")
+    nodes = spark.range(n).selectExpr("id")
+    csr = build_csr(edges, num_blocks=3)
 
+    # Uninterrupted run.
+    full = pagerank_block(spark, csr, nodes, tol=1e-10, max_iter=60)
+    assert full.converged
+
+    # Interrupted run: stop after 5 iterations (simulated kill), resume.
+    ck_root = str(tmp_path / "ck")
+    ck = CheckpointManager(spark, ck_root, run_id="r1")
+    pagerank_block(spark, csr, nodes, tol=1e-10, max_iter=5, checkpointer=ck)
+    last = ck.latest_iteration()
+    assert last == 5
+    state = ck.load_iteration(last)
+    ck2 = CheckpointManager(spark, ck_root, run_id="r2")
+    resumed = pagerank_block(
+        spark, csr, nodes, tol=1e-10, max_iter=60,
+        checkpointer=ck2, initial_state=state, start_iteration=last,
+    )
+    assert resumed.converged
+    assert np.allclose(_vec(full.ranks, n), _vec(resumed.ranks, n), atol=1e-12)
+
+    # Lineage: every iteration accounted at block granularity (3 state rows
+    # per iteration), wall time recorded.
+    lin = ck.lineage()
+    per_iter = lin.groupby("iteration")["row_count"].sum()
+    assert (per_iter == 3).all()
+    assert (lin["wall_ms"] > 0).all()
+    assert {"run_id", "iteration", "partition_id", "row_count", "checksum",
+            "wall_ms", "delta"} <= set(lin.columns)
+
+
+def test_pagerank_block_resume_allclose(spark, tmp_path):
     n = 80
     arcs = er_arcs(n, 0.05, 4)
     edges = spark.createDataFrame(arcs, "src long, dst long")
@@ -156,12 +155,12 @@ def test_resume_from_partially_written_iteration(spark, tmp_path):
     nodes = spark.range(n).selectExpr("id")
     csr = build_csr(edges, num_blocks=3)
 
-    full = pagerank(spark, csr, nodes, tol=1e-10, max_iter=60)
+    full = pagerank_block(spark, csr, nodes, tol=1e-10, max_iter=60)
     assert full.converged
 
     root = str(tmp_path / "ck")
     ck = CheckpointManager(spark, root, run_id="k1")
-    pagerank(spark, csr, nodes, tol=1e-10, max_iter=3, checkpointer=ck)
+    pagerank_block(spark, csr, nodes, tol=1e-10, max_iter=3, checkpointer=ck)
 
     # simulate the kill: a half-written iteration-4 staging dir (truncated,
     # unreadable parquet bytes) and its in-flight lineage temp file
@@ -180,18 +179,19 @@ def test_resume_from_partially_written_iteration(spark, tmp_path):
     assert set(ck2.lineage()["iteration"]) == {1, 2, 3}
 
     # resume re-runs iteration 4 and publishes it over the wreckage
-    resumed = pagerank(
+    resumed = pagerank_block(
         spark, csr, nodes, tol=1e-10, max_iter=60,
-        checkpointer=ck2, initial_ranks=ck2.load_iteration(3),
+        checkpointer=ck2, initial_state=ck2.load_iteration(3),
         start_iteration=3,
     )
     assert resumed.converged
     assert np.allclose(_vec(full.ranks, n), _vec(resumed.ranks, n), atol=1e-12)
-    # iteration 4 is now a clean publish: readable state + exactly one
-    # lineage record; the stale staging dir still doesn't surface
-    assert ck2.load_iteration(4).count() == n
+    # iteration 4 is now a clean publish: readable state (one row per
+    # block) + exactly one lineage record; the stale staging dir still
+    # doesn't surface
+    assert ck2.load_iteration(4).count() == 3
     lin4 = ck2.lineage().query("iteration == 4")
-    assert lin4["row_count"].sum() == n
+    assert lin4["row_count"].sum() == 3
     assert lin4["run_id"].unique().tolist() == ["k2"]
 
 
@@ -254,22 +254,29 @@ pagerank_block(spark, csr, spark.range({n}).selectExpr("id"),
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
         start_new_session=True,  # own process group: the kill takes the JVM too
     )
+    def kill():
+        # the victim can exit between a poll and the kill
+        try:
+            os.killpg(proc.pid, signal.SIGKILL)
+        except ProcessLookupError:
+            pass
+
     state_dir = os.path.join(root, "state")
     deadline = time.time() + 180
     try:
         while time.time() < deadline and proc.poll() is None:
             if os.path.isdir(os.path.join(state_dir, "iter=000003")):
-                os.killpg(proc.pid, signal.SIGKILL)
+                kill()
                 break
             time.sleep(0.05)
         else:
             if proc.poll() is None:
-                os.killpg(proc.pid, signal.SIGKILL)
+                kill()
                 raise AssertionError("victim never published iteration 3")
         proc.wait(timeout=30)
     finally:
         if proc.poll() is None:
-            os.killpg(proc.pid, signal.SIGKILL)
+            kill()
 
     ck2 = CheckpointManager(spark, root, run_id="resumer")
     latest = ck2.latest_iteration()

@@ -53,10 +53,12 @@ def test_path_graph_converges(spark):
     assert res.changed_per_iter[-1] == 0
 
 
-def test_slotform_cache_reused_across_kernels(spark):
+def test_slotform_cache_reused_across_kernels(spark, tmp_path):
     # LPA then CC on ONE symmetrized CsrGraph: the second kernel must reuse
     # the cached pair slot-form instead of re-decoding
     from webgraph_spark.algo.labelprop_block import label_propagation_block
+    from webgraph_spark.algo.pagerank_block import pagerank_block
+    from webgraph_spark.checkpoint import CheckpointManager
 
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (5, 6)], "src long, dst long"
@@ -70,3 +72,15 @@ def test_slotform_cache_reused_across_kernels(spark):
     res = hash_min_components_block(spark, csr, nodes)
     assert csr._pair_slotform_cache is cached  # same object — no rebuild
     assert _comps(res.components) == {0: 0, 1: 0, 2: 0, 3: 0, 5: 5, 6: 5}
+
+    # a resumed PageRank on the directed CSR reuses the slot-form its
+    # checkpointed run cached
+    dcsr = build_csr(edges, num_blocks=2)
+    ck = CheckpointManager(spark, str(tmp_path / "pr"), run_id="p1")
+    pagerank_block(spark, dcsr, nodes, tol=0.0, max_iter=2, checkpointer=ck)
+    cached = dcsr._pair_slotform_cache
+    pagerank_block(
+        spark, dcsr, nodes, tol=0.0, max_iter=4,
+        initial_state=ck.load_iteration(2), start_iteration=2,
+    )
+    assert dcsr._pair_slotform_cache is cached

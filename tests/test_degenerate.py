@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from webgraph_spark.algo.components import hash_min_components
 from webgraph_spark.algo.labelprop import label_propagation
-from webgraph_spark.algo.pagerank import pagerank
+from webgraph_spark.algo.pagerank_block import pagerank_block
 from webgraph_spark.algo.scc import strongly_connected_components
 from webgraph_spark.algo.triangles import triangle_count, triangle_count_adjacency
 from webgraph_spark.plans.csr import build_csr, csr_to_edges
@@ -34,13 +34,13 @@ def test_csr_empty_roundtrip(spark):
 
 def test_pagerank_isolated_and_loop(spark):
     # single isolated node: all mass stays on it
-    res = pagerank(spark, build_csr(_empty(spark), num_blocks=1),
-                   _nodes1(spark), max_iter=3)
+    res = pagerank_block(spark, build_csr(_empty(spark), num_blocks=1),
+                         _nodes1(spark), max_iter=3)
     rows = res.ranks.collect()
     assert len(rows) == 1 and abs(rows[0]["rank"] - 1.0) < 1e-12
     # single self-loop node: fixpoint rank 1.0
-    res2 = pagerank(spark, build_csr(_loop(spark), num_blocks=1),
-                    _nodes1(spark), max_iter=5)
+    res2 = pagerank_block(spark, build_csr(_loop(spark), num_blocks=1),
+                          _nodes1(spark), max_iter=5)
     assert abs(res2.ranks.collect()[0]["rank"] - 1.0) < 1e-12
 
 

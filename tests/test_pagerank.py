@@ -9,11 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.oracles import er_arcs
-from webgraph_spark.algo.pagerank import (
-    pagerank,
-    pagerank_edges,
-    pagerank_numpy,
-)
+from webgraph_spark.algo.pagerank import pagerank_edges, pagerank_numpy
+from webgraph_spark.algo.pagerank_block import pagerank_block
 from webgraph_spark.plans.csr import build_csr
 
 
@@ -34,7 +31,7 @@ def test_cycle_uniform(spark):
     arcs = [(i, (i + 1) % n) for i in range(n)]
     edges = spark.createDataFrame(arcs, "src long, dst long")
     csr = build_csr(edges, num_blocks=3)
-    res = pagerank(spark, csr, _nodes(spark, n), tol=1e-9)
+    res = pagerank_block(spark, csr, _nodes(spark, n), tol=1e-9)
     assert res.converged
     vec = _rank_vec(res.ranks, n)
     assert np.allclose(vec, 1.0 / n, atol=1e-6)
@@ -46,7 +43,7 @@ def test_complete_k7_uniform(spark):
     arcs = [(i, j) for i in range(n) for j in range(n) if i != j]
     edges = spark.createDataFrame(arcs, "src long, dst long")
     csr = build_csr(edges, num_blocks=2)
-    res = pagerank(spark, csr, _nodes(spark, n))
+    res = pagerank_block(spark, csr, _nodes(spark, n))
     vec = _rank_vec(res.ranks, n)
     assert np.allclose(vec, 1.0 / n, atol=1e-6)
 
@@ -56,7 +53,7 @@ def test_dangling_mass_redistribution(spark):
     arcs = [(i, 4) for i in range(4)]
     edges = spark.createDataFrame(arcs, "src long, dst long")
     csr = build_csr(edges, num_blocks=1)
-    res = pagerank(spark, csr, _nodes(spark, 5), tol=1e-12, max_iter=500)
+    res = pagerank_block(spark, csr, _nodes(spark, 5), tol=1e-12, max_iter=500)
     vec = _rank_vec(res.ranks, 5)
     expect = pagerank_numpy(arcs, 5, tol=1e-12, max_iter=500)
     assert np.allclose(vec, expect, atol=1e-8)
@@ -69,7 +66,7 @@ def test_er_vs_numpy_oracle(spark, seed):
     arcs = er_arcs(n, 0.04, seed)
     edges = spark.createDataFrame(arcs, "src long, dst long")
     csr = build_csr(edges, num_blocks=4)
-    res = pagerank(spark, csr, _nodes(spark, n), tol=1e-9)
+    res = pagerank_block(spark, csr, _nodes(spark, n), tol=1e-9)
     assert res.converged
     vec = _rank_vec(res.ranks, n)
     expect = pagerank_numpy(arcs, n, tol=1e-9)
@@ -79,13 +76,13 @@ def test_er_vs_numpy_oracle(spark, seed):
 
 
 def test_csr_vs_edges_differential(spark):
-    # Two independent executions (CSR kernel vs plain join/agg) must agree
+    # Two independent executions (block kernel vs plain join/agg) must agree
     # to float precision — the SequentialHyperBall-style differential test.
     arcs = er_arcs(80, 0.05, 7)
     edges = spark.createDataFrame(arcs, "src long, dst long")
     nodes = _nodes(spark, 80)
     csr = build_csr(edges, num_blocks=3)
-    r1 = pagerank(spark, csr, nodes, tol=1e-9)
+    r1 = pagerank_block(spark, csr, nodes, tol=1e-9)
     r2 = pagerank_edges(edges, nodes, tol=1e-9)
     v1, v2 = _rank_vec(r1.ranks, 80), _rank_vec(r2.ranks, 80)
     assert np.allclose(v1, v2, atol=1e-9)

@@ -123,3 +123,32 @@ def test_broadcast_hint_produces_broadcast_join(spark):
     plan = _plan(j)
     assert "BroadcastHashJoin" in plan
     assert "Exchange hashpartitioning" not in plan
+
+
+def test_checkpoint_state_statistics_do_not_grow(spark):
+    # a state frame re-derived from itself through two cogroup inputs: if
+    # the checkpointed frame kept its plan's statistics, the size estimate
+    # (the product of both inputs') would square every round
+    from webgraph_spark.plans.iterate import checkpoint_state
+
+    def first(left, right):
+        return left
+
+    def size(df):
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        return int(str(stats.sizeInBytes()))
+
+    state = spark.range(4).selectExpr("id AS k", "id AS v")
+    state = state.transform(checkpoint_state)
+    start = None
+    for _ in range(20):
+        state = (
+            state.groupby("k")
+            .cogroup(state.groupby("k"))
+            .applyInArrow(first, schema="k long, v long")
+            .transform(checkpoint_state)
+        )
+        start = start or size(state)
+        # checked every round: a squaring estimate soon outgrows what the
+        # JVM bridge can convert
+        assert size(state) <= start

@@ -52,13 +52,13 @@ def test_warm_start_pagerank_converges_faster(spark):
     )
     warm = pagerank_edges(edges2, nodes, tol=1e-7, max_iter=150)
     # build a warm variant manually: seed ranks with cold result
-    from webgraph_spark.algo.pagerank import PageRankResult, pagerank, pagerank_numpy
+    from webgraph_spark.algo.pagerank import pagerank_numpy
+    from webgraph_spark.algo.pagerank_block import pagerank_block
     from webgraph_spark.plans.csr import build_csr
 
     csr2 = build_csr(edges2, num_blocks=2)
-    warm_csr = pagerank(
-        spark, csr2, nodes, tol=1e-7, max_iter=150,
-        initial_ranks=cold.ranks,
+    warm_csr = pagerank_block(
+        spark, csr2, nodes, tol=1e-7, max_iter=150, initial=cold.ranks,
     )
     assert warm_csr.converged
     assert warm_csr.iterations < warm.iterations  # warm start saves rounds

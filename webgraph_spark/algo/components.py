@@ -6,6 +6,13 @@ size (``sortBySize``, ``:163-173``). The distributed formulation here is
 hash-min fixpoint (comp <- min(comp, min over neighbours' comp)), which
 yields the same partition of the vertex set; after canonical renumbering
 (size desc, then min-member asc) the outputs match the reference exactly.
+
+Two formulations of the same synchronous fixpoint: :func:`hash_min_components`
+(row state, with a star-contraction finish for long chains; it backs the
+driver oracle queries) and the throughput path
+:func:`webgraph_spark.algo.components_block.hash_min_components_block`, which
+runs on the block-vector fixpoint engine shared with PageRank and LPA
+(:mod:`webgraph_spark.plans.blockvec`).
 """
 
 from __future__ import annotations

@@ -5,19 +5,14 @@ The row-state kernel (:func:`webgraph_spark.algo.components
 is systolic — only changed labels are re-sent — but still pays two O(state)
 exchanges and a JVM hash aggregate per round. This variant runs the SAME
 synchronous hash-min fixpoint (component label = min over own label and all
-neighbours' labels, per round, over the symmetrized graph) in the block-
-vector form shared with :mod:`webgraph_spark.algo.labelprop_block`:
+neighbours' labels, per round, over the symmetrized graph) on the shared
+block-vector engine (:mod:`webgraph_spark.plans.blockvec`):
 
-1. cogroup(slotform, state) on the source block — the cached edge-aligned
-   (src_slot, dst_slot) slot-form streams with no exchange; the kernel
-   gathers source labels and PRE-COMBINES per destination slot with one
-   ``np.minimum.reduceat`` after a slot sort — one compact binary row per
-   (src_block, dst_block) pair: (slots, mins).
-2. shuffle those B² partial-min rows by dst_block — at most one (slot, min)
-   entry per DISTINCT destination per source block, binary-packed.
-3. cogroup(partials, state) on the destination block: fold the incoming
-   minima into the label vector (``new = minimum(old, incoming)``), count
-   changes, ride the count on the eager checkpoint — ONE action per round.
+- gather: source labels by slot, PRE-COMBINED per destination slot with one
+  ``np.minimum.reduceat`` after a slot sort — at most one (slot, min) entry
+  per distinct destination per block pair, binary-packed;
+- fold: ``new = minimum(old, incoming)``, counting changed live slots; the
+  run stops when no label changes.
 
 Exact integer minima — bit-identical to the row kernel at every round
 (differential-tested); the fixpoint is the min node id per component either
@@ -29,29 +24,13 @@ the north rule targets.
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
-import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from webgraph_spark.algo.components import ComponentsResult
+from webgraph_spark.plans.blockvec import BlockSpec, fixpoint
 from webgraph_spark.plans.csr import CsrGraph
-from webgraph_spark.plans.iterate import checkpoint_state
-from webgraph_spark.plans.slotform import (
-    block_ranges,
-    build_pair_slotform,
-    make_explode_kernel,
-    make_init_kernel,
-)
-
-_STATE_SCHEMA = (
-    "block_id long, lo long, hi long, mask binary, comps binary, "
-    "block_changed long"
-)
-
-_PARTIAL_SCHEMA = "dst_block long, slots binary, mins binary"
 
 
 def _min_per_slot(ds: np.ndarray, vals: np.ndarray):
@@ -63,6 +42,30 @@ def _min_per_slot(ds: np.ndarray, vals: np.ndarray):
     np.not_equal(ds[1:], ds[:-1], out=first[1:])
     starts = np.flatnonzero(first)
     return ds[starts], np.minimum.reduceat(vals, starts)
+
+
+def _gather(st, ss, ds):
+    slots, mins = _min_per_slot(ds, st["comps"][ss])
+    return slots.astype(np.int32).tobytes(), mins.astype(np.int64).tobytes()
+
+
+def _fold(st, parts):
+    old, new, changed = st["comps"], st["comps"], 0
+    if parts.num_rows:
+        # one combine over all incoming partials, then a single vectorized
+        # fold — np.minimum.at is an order of magnitude slower than the
+        # sort + reduceat path on large slot arrays
+        slots = np.concatenate(
+            [np.frombuffer(v.as_py(), dtype=np.int32) for v in parts.column("slots")]
+        )
+        mins = np.concatenate(
+            [np.frombuffer(v.as_py(), dtype=np.int64) for v in parts.column("mins")]
+        )
+        u_slots, u_mins = _min_per_slot(slots, mins)
+        new = old.copy()
+        new[u_slots] = np.minimum(old[u_slots], u_mins)
+        changed = int(np.count_nonzero((new != old) & (st["mask"] > 0)))
+    return {"comps": new, "block_changed": changed}
 
 
 def hash_min_components_block(
@@ -78,149 +81,26 @@ def hash_min_components_block(
 
     ``csr_sym`` must be built from the symmetrized edge set (see
     :func:`webgraph_spark.plans.partitioning.symmetrize_for_join`); the
-    caller owns that contract. Converges when no label changes.
+    caller owns that contract. ``nodes`` must cover every edge endpoint
+    (``ValueError`` otherwise). Converges when no label changes.
     """
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    tagged = nodes.select("id").withColumn(
-        "block_id", csr_sym.node_block_id_col("id")
+    spec = BlockSpec(
+        value="comps",
+        vectors={"comps": "int64"},
+        metrics={"block_changed": "long"},
+        partials=("slots", "mins"),
+        gather=_gather,
+        fold=_fold,
+        stop=lambda m: m["block_changed"] == 0,
     )
-
-    tagged = tagged.withColumn("__val", F.col("id"))
-    init_kernel = make_init_kernel(
-        "comps",
-        ("block_id", "lo", "hi", "mask", "comps", "block_changed"),
+    run = fixpoint(
+        spark, csr_sym, spec, nodes.select("id", F.col("id").alias("comps")),
+        max_iter, checkpointer=checkpointer, initial_state=initial_state,
+        start_iteration=start_iteration,
     )
-
-    if initial_state is not None:
-        # resume: the checkpointed block-state frame is the whole kernel
-        # state — no graph re-scan, no per-node re-init
-        state = initial_state.select(
-            "block_id", "lo", "hi", "mask", "comps", "block_changed"
-        ).transform(checkpoint_state)
-    else:
-        state = (
-            tagged.groupBy("block_id")
-            .applyInPandas(init_kernel, schema=_STATE_SCHEMA)
-            .transform(checkpoint_state)
-        )
-    rng_bid, rng_lo, rng_hi = block_ranges(
-        state.select("block_id", "lo", "hi").collect()
-    )
-    slotform = build_pair_slotform(
-        csr_sym, rng_bid, rng_lo, rng_hi, shuffle_parts
-    )
-
-    def gather_kernel(slot_tbl: "pa.Table", state_tbl: "pa.Table") -> "pa.Table":
-        out_dstb: list[int] = []
-        out_slots: list[bytes] = []
-        out_mins: list[bytes] = []
-        if state_tbl.num_rows and slot_tbl.num_rows:
-            cvec = np.frombuffer(
-                state_tbl.column("comps")[0].as_py(), dtype=np.int64
-            )
-            dstb_col = slot_tbl.column("dst_block")
-            ss_col = slot_tbl.column("src_slot")
-            ds_col = slot_tbl.column("dst_slot")
-            for i in range(slot_tbl.num_rows):
-                ss = np.frombuffer(ss_col[i].as_py(), dtype=np.int32)
-                ds = np.frombuffer(ds_col[i].as_py(), dtype=np.int32)
-                if ds.size == 0:
-                    continue
-                u_ds, u_min = _min_per_slot(ds, cvec[ss])
-                out_dstb.append(int(dstb_col[i].as_py()))
-                out_slots.append(u_ds.astype(np.int32).tobytes())
-                out_mins.append(u_min.astype(np.int64).tobytes())
-        return pa.table(
-            {
-                "dst_block": pa.array(out_dstb, pa.int64()),
-                "slots": pa.array(out_slots, pa.binary()),
-                "mins": pa.array(out_mins, pa.binary()),
-            }
-        )
-
-    result = ComponentsResult(components=None, iterations=start_iteration)
-    for it in range(start_iteration, max_iter):
-        t0 = time.monotonic()
-        partials = (
-            slotform.groupby("src_block")
-            .cogroup(state.groupby("block_id"))
-            .applyInArrow(gather_kernel, schema=_PARTIAL_SCHEMA)
-        )
-        obs = Observation()
-        new_state = (
-            partials.groupby("dst_block")
-            .cogroup(state.groupby("block_id"))
-            .applyInArrow(_update_kernel, schema=_STATE_SCHEMA)
-            .observe(obs, F.sum("block_changed").alias("c"))
-            .transform(checkpoint_state)
-        )
-        changed = int(obs.get["c"] or 0)
-        state = new_state
-        result.changed_per_iter.append(changed)
-        wall = time.monotonic() - t0
-        result.iter_seconds.append(wall)
-        result.iterations = it + 1
-        if checkpointer is not None:
-            checkpointer.save_iteration(
-                state, it + 1, wall_s=wall, delta=float(changed)
-            )
-        if changed == 0:
-            break
-    # the slot-form stays cached on csr_sym for the next block kernel run
-
-    result.components = state.mapInArrow(
-        make_explode_kernel("comps", "comp"), schema="id long, comp long"
-    )
-    return result
-
-
-_ARROW_STATE = pa.schema(
-    [
-        ("block_id", pa.int64()),
-        ("lo", pa.int64()),
-        ("hi", pa.int64()),
-        ("mask", pa.binary()),
-        ("comps", pa.binary()),
-        ("block_changed", pa.int64()),
-    ]
-)
-
-
-def _update_kernel(parts_tbl: "pa.Table", state_tbl: "pa.Table") -> "pa.Table":
-    if state_tbl.num_rows == 0:
-        return pa.table({f.name: pa.array([], f.type) for f in _ARROW_STATE})
-    mask = np.frombuffer(state_tbl.column("mask")[0].as_py(), dtype=np.int8)
-    old = np.frombuffer(state_tbl.column("comps")[0].as_py(), dtype=np.int64)
-    new = old
-    changed = 0
-    if parts_tbl.num_rows:
-        # one combine over all incoming partials, then a single vectorized
-        # fold — np.minimum.at is an order of magnitude slower than the
-        # sort + reduceat path on large slot arrays
-        slots = np.concatenate(
-            [
-                np.frombuffer(v.as_py(), dtype=np.int32)
-                for v in parts_tbl.column("slots")
-            ]
-        )
-        mins = np.concatenate(
-            [
-                np.frombuffer(v.as_py(), dtype=np.int64)
-                for v in parts_tbl.column("mins")
-            ]
-        )
-        if slots.size:
-            u_slots, u_mins = _min_per_slot(slots, mins)
-            new = old.copy()
-            new[u_slots] = np.minimum(old[u_slots], u_mins)
-            changed = int(np.count_nonzero((new != old) & (mask > 0)))
-    return pa.table(
-        {
-            "block_id": state_tbl.column("block_id"),
-            "lo": state_tbl.column("lo"),
-            "hi": state_tbl.column("hi"),
-            "mask": state_tbl.column("mask"),
-            "comps": pa.array([new.tobytes()], pa.binary()),
-            "block_changed": pa.array([changed], pa.int64()),
-        }
+    return ComponentsResult(
+        components=run.explode("comp"),
+        iterations=run.iterations,
+        changed_per_iter=run.metric("block_changed"),
+        iter_seconds=run.iter_seconds,
     )

@@ -7,11 +7,12 @@ over the symmetrized graph; ties broken by the smallest label; nodes with no
 neighbours keep their label. Deterministic given (graph, max_iter).
 
 Scale-path note (round 4): the DESIGNATED scale path for LPA is the
-bit-identical block-vector kernel (:mod:`webgraph_spark.algo.labelprop_block`
-— measured N→4N efficiency 1.01 at 113.7M edges under the pinned protocol,
-vs 0.695 for this row kernel at the same size; docs/SCALING.md §7b). This
-kernel stays as the small-graph/ad-hoc path, the differential-test twin,
-and the oracle surface.
+bit-identical block-vector kernel (:mod:`webgraph_spark.algo.labelprop_block`,
+on the fixpoint engine shared with PageRank and CC,
+:mod:`webgraph_spark.plans.blockvec` — measured N→4N efficiency 1.01 at
+113.7M edges under the pinned protocol, vs 0.695 for this row kernel at the
+same size; docs/SCALING.md §7b). This kernel stays as the small-graph/ad-hoc
+path, the differential-test twin, and the oracle surface.
 """
 
 from __future__ import annotations

@@ -5,36 +5,21 @@ pays three exchanges per round — the O(n) label table to the edge layout, the
 O(m) gathered (dst, label) rows into the vote aggregate, and the vote
 partials to the final per-node aggregate — and the (dst, label) hash
 aggregate is the dominant cost (it hashes one JVM row per edge per round).
-This variant mirrors :mod:`webgraph_spark.algo.pagerank_block`: the entire
-label state lives as one dense ``array<int64>`` per CSR block of the
-SYMMETRIZED graph, and one round is
+This variant runs on the shared block-vector engine
+(:mod:`webgraph_spark.plans.blockvec`) over a CSR of the SYMMETRIZED graph:
 
-1. cogroup(slotform, state) on the source block — the slot-form (per
-   (src_block, dst_block) pair: edge-aligned int32 ``src_slot``/``dst_slot``
-   arrays, decoded from the varint CSR exactly once and cached) streams with
-   no exchange; the kernel gathers source labels by slot indexing and
-   PRE-COMBINES the (dst_slot, label) votes of the pair with one lexsort —
-   emitting one compact binary row per block pair (slots + labels + counts),
-   never one row per edge.
-2. shuffle those B² partial-vote rows by dst_block — bytes are bounded by
-   the number of DISTINCT (dst, label) pairs per source block, which starts
-   ≤ m and collapses as labels coalesce (the whole point of LPA).
-3. cogroup(partials, state) on the destination block: merge the partial
-   counts (one lexsort over the concatenated triples), pick each slot's
-   winner (max count, ties to the LOWEST label — the same deterministic rule
-   as the row kernel and the SQL oracle), keep the old label where no vote
-   arrived, and ride the per-block changed count on the eager checkpoint as
-   an observed metric — ONE Spark action per round.
+- gather: source labels by slot, and the (dst_slot, label) votes of each
+  block pair PRE-COMBINED with one lexsort — one compact binary row per
+  block pair (slots + labels + counts), never one row per edge. Shuffle
+  bytes are bounded by the DISTINCT (dst, label) pairs per source block,
+  which start ≤ m and collapse as labels coalesce (the whole point of LPA).
+- fold: merge the partial counts (one lexsort over the concatenated
+  triples), pick each slot's winner (max count, ties to the LOWEST label —
+  the same deterministic rule as the row kernel and the SQL oracle), keep
+  the old label where no vote arrived, and count changed live slots.
 
 Semantics are bit-identical to the row kernel (differential-tested): votes
 are integer counts, so there is no float-order hazard at all.
-
-Scale notes: state bytes per round are O(id-range · 8); the shuffle is the
-pre-combined vote partials (≤ min(m, distinct pairs) · 14 bytes, binary-
-packed — no JVM row overhead); per-edge CPU is one gather + one lexsort per
-round, all inside numpy. Like the PageRank block kernel this assumes
-reasonably dense node ids (``sources/ids.mint_dense_ids`` is the standard
-preprocessing, exactly as WebGraph renumbers to 0..n-1).
 
 THIS KERNEL IS THE DESIGNATED LPA SCALE PATH (round 4): under the pinned
 two-level protocol it measures scaling efficiency 1.01 at 113.7M edges
@@ -48,30 +33,13 @@ the small-graph/ad-hoc path and the differential-test twin.
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
-import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from webgraph_spark.algo.labelprop import LabelPropResult
+from webgraph_spark.plans.blockvec import BlockSpec, fixpoint
 from webgraph_spark.plans.csr import CsrGraph
-from webgraph_spark.plans.iterate import checkpoint_state
-from webgraph_spark.plans.slotform import (
-    block_ranges,
-    build_pair_slotform,
-    make_explode_kernel,
-    make_init_kernel,
-)
-
-_STATE_SCHEMA = (
-    "block_id long, lo long, hi long, mask binary, labels binary, "
-    "block_changed long"
-)
-
-_PARTIAL_SCHEMA = "dst_block long, slots binary, labs binary, cnts binary"
-
 
 
 def _combine_votes(ds: np.ndarray, lab: np.ndarray, cnt: np.ndarray):
@@ -90,6 +58,41 @@ def _combine_votes(ds: np.ndarray, lab: np.ndarray, cnt: np.ndarray):
     return ds[starts], lab[starts], sums
 
 
+def _gather(st, ss, ds):
+    u_ds, u_lab, u_cnt = _combine_votes(
+        ds, st["labels"][ss], np.ones(ds.size, dtype=np.int32)
+    )
+    return (
+        u_ds.astype(np.int32).tobytes(),
+        u_lab.astype(np.int64).tobytes(),
+        u_cnt.astype(np.int64).tobytes(),
+    )
+
+
+def _fold(st, parts):
+    old, new, changed = st["labels"], st["labels"], 0
+    if parts.num_rows:
+        ds, lab, cnt = (
+            np.concatenate(
+                [np.frombuffer(v.as_py(), dtype=dtype) for v in parts.column(c)]
+            )
+            for c, dtype in (("slots", np.int32), ("labs", np.int64),
+                             ("cnts", np.int64))
+        )
+        ds, lab, cnt = _combine_votes(ds, lab, cnt)
+        # winner per slot: max count, ties to the LOWEST label — sort by
+        # (slot asc, count desc, label asc), take each slot's first
+        order = np.lexsort((lab, -cnt, ds))
+        ds, lab = ds[order], lab[order]
+        first = np.empty(ds.size, dtype=bool)
+        first[0] = True
+        np.not_equal(ds[1:], ds[:-1], out=first[1:])
+        new = old.copy()
+        new[ds[first]] = lab[first]
+        changed = int(np.count_nonzero((new != old) & (st["mask"] > 0)))
+    return {"labels": new, "block_changed": changed}
+
+
 def label_propagation_block(
     spark: SparkSession,
     csr_sym: CsrGraph,
@@ -104,180 +107,35 @@ def label_propagation_block(
 
     ``csr_sym`` must be built from the symmetrized edge set (both directions
     present, duplicates removed) — the caller owns that contract; see
-    :func:`webgraph_spark.plans.partitioning.symmetrize_for_join`. Stops at
+    :func:`webgraph_spark.plans.partitioning.symmetrize_for_join`. ``nodes``
+    must cover every edge endpoint (``ValueError`` otherwise). Stops at
     fixpoint or after ``max_iter`` rounds, like the row kernel.
     """
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    tagged = nodes.select("id").withColumn(
-        "block_id", csr_sym.node_block_id_col("id")
-    )
+    values = nodes.select("id")
     if initial is not None:
         # nodes missing from a partial `initial` keep their id as the label
         # (the row kernel's rule); without the coalesce the NULL would cast
         # to INT64_MIN in the kernel and win every min tie-break
-        tagged = tagged.join(initial.select("id", "label"), "id", "left")
-        tagged = tagged.withColumn(
-            "__val", F.coalesce(F.col("label"), F.col("id"))
-        )
+        values = values.join(initial.select("id", "label"), "id", "left")
+        values = values.select("id", F.coalesce("label", "id").alias("labels"))
     else:
-        tagged = tagged.withColumn("__val", F.col("id"))
-
-    init_kernel = make_init_kernel(
-        "labels",
-        ("block_id", "lo", "hi", "mask", "labels", "block_changed"),
+        values = values.select("id", F.col("id").alias("labels"))
+    spec = BlockSpec(
+        value="labels",
+        vectors={"labels": "int64"},
+        metrics={"block_changed": "long"},
+        partials=("slots", "labs", "cnts"),
+        gather=_gather,
+        fold=_fold,
+        stop=lambda m: m["block_changed"] == 0,
     )
-
-    if initial_state is not None:
-        # resume: the checkpointed block-state frame is the whole kernel
-        # state — no graph re-scan, no per-node re-init
-        state = initial_state.select(
-            "block_id", "lo", "hi", "mask", "labels", "block_changed"
-        ).transform(checkpoint_state)
-    else:
-        state = (
-            tagged.groupBy("block_id")
-            .applyInPandas(init_kernel, schema=_STATE_SCHEMA)
-            .transform(checkpoint_state)
-        )
-    rng_bid, rng_lo, rng_hi = block_ranges(
-        state.select("block_id", "lo", "hi").collect()
+    run = fixpoint(
+        spark, csr_sym, spec, values, max_iter, checkpointer=checkpointer,
+        initial_state=initial_state, start_iteration=start_iteration,
     )
-
-    # decode the varint CSR once into edge-aligned (src_slot, dst_slot)
-    # int32 pairs per (src_block, dst_block) — shared with the block CC
-    # kernel and cached on the CsrGraph for cross-algorithm reuse
-    slotform = build_pair_slotform(
-        csr_sym, rng_bid, rng_lo, rng_hi, shuffle_parts
-    )
-
-    def vote_kernel(slot_tbl: "pa.Table", state_tbl: "pa.Table") -> "pa.Table":
-        out_dstb: list[int] = []
-        out_slots: list[bytes] = []
-        out_labs: list[bytes] = []
-        out_cnts: list[bytes] = []
-        if state_tbl.num_rows and slot_tbl.num_rows:
-            lvec = np.frombuffer(
-                state_tbl.column("labels")[0].as_py(), dtype=np.int64
-            )
-            dstb_col = slot_tbl.column("dst_block")
-            ss_col = slot_tbl.column("src_slot")
-            ds_col = slot_tbl.column("dst_slot")
-            for i in range(slot_tbl.num_rows):
-                ss = np.frombuffer(ss_col[i].as_py(), dtype=np.int32)
-                ds = np.frombuffer(ds_col[i].as_py(), dtype=np.int32)
-                lab = lvec[ss]
-                u_ds, u_lab, u_cnt = _combine_votes(
-                    ds, lab, np.ones(ds.size, dtype=np.int32)
-                )
-                out_dstb.append(int(dstb_col[i].as_py()))
-                out_slots.append(u_ds.astype(np.int32).tobytes())
-                out_labs.append(u_lab.astype(np.int64).tobytes())
-                out_cnts.append(u_cnt.astype(np.int64).tobytes())
-        return pa.table(
-            {
-                "dst_block": pa.array(out_dstb, pa.int64()),
-                "slots": pa.array(out_slots, pa.binary()),
-                "labs": pa.array(out_labs, pa.binary()),
-                "cnts": pa.array(out_cnts, pa.binary()),
-            }
-        )
-
-    result = LabelPropResult(labels=None, iterations=start_iteration)
-    for it in range(start_iteration, max_iter):
-        t0 = time.monotonic()
-        partials = (
-            slotform.groupby("src_block")
-            .cogroup(state.groupby("block_id"))
-            .applyInArrow(vote_kernel, schema=_PARTIAL_SCHEMA)
-        )
-        obs = Observation()
-        new_state = (
-            partials.groupby("dst_block")
-            .cogroup(state.groupby("block_id"))
-            .applyInArrow(_update_kernel, schema=_STATE_SCHEMA)
-            .observe(obs, F.sum("block_changed").alias("c"))
-            .transform(checkpoint_state)
-        )
-        changed = int(obs.get["c"] or 0)
-        state = new_state
-        result.changed_per_iter.append(changed)
-        wall = time.monotonic() - t0
-        result.iter_seconds.append(wall)
-        result.iterations = it + 1
-        if checkpointer is not None:
-            checkpointer.save_iteration(
-                state, it + 1, wall_s=wall, delta=float(changed)
-            )
-        if changed == 0:
-            break
-    # the slot-form stays persisted: it lives in csr_sym._pair_slotform_cache
-    # for the next block kernel on this CsrGraph (CC, or another LPA run)
-
-    result.labels = state.mapInArrow(
-        make_explode_kernel("labels", "label"), schema="id long, label long"
-    )
-    return result
-
-
-_ARROW_STATE = pa.schema(
-    [
-        ("block_id", pa.int64()),
-        ("lo", pa.int64()),
-        ("hi", pa.int64()),
-        ("mask", pa.binary()),
-        ("labels", pa.binary()),
-        ("block_changed", pa.int64()),
-    ]
-)
-
-
-def _update_kernel(parts_tbl: "pa.Table", state_tbl: "pa.Table") -> "pa.Table":
-    if state_tbl.num_rows == 0:
-        return pa.table({f.name: pa.array([], f.type) for f in _ARROW_STATE})
-    mask = np.frombuffer(state_tbl.column("mask")[0].as_py(), dtype=np.int8)
-    old = np.frombuffer(state_tbl.column("labels")[0].as_py(), dtype=np.int64)
-    new = old
-    changed = 0
-    if parts_tbl.num_rows:
-        ds = np.concatenate(
-            [
-                np.frombuffer(v.as_py(), dtype=np.int32)
-                for v in parts_tbl.column("slots")
-            ]
-        )
-        lab = np.concatenate(
-            [
-                np.frombuffer(v.as_py(), dtype=np.int64)
-                for v in parts_tbl.column("labs")
-            ]
-        )
-        cnt = np.concatenate(
-            [
-                np.frombuffer(v.as_py(), dtype=np.int64)
-                for v in parts_tbl.column("cnts")
-            ]
-        )
-        ds, lab, cnt = _combine_votes(ds, lab, cnt)
-        if ds.size:
-            # winner per slot: max count, ties to the LOWEST label — sort
-            # by (slot asc, count desc, label asc), take each slot's first
-            order = np.lexsort((lab, -cnt, ds))
-            ds, lab = ds[order], lab[order]
-            first = np.empty(ds.size, dtype=bool)
-            first[0] = True
-            np.not_equal(ds[1:], ds[:-1], out=first[1:])
-            win_slots = ds[first]
-            win_labs = lab[first]
-            new = old.copy()
-            new[win_slots] = win_labs
-            changed = int(np.count_nonzero((new != old) & (mask > 0)))
-    return pa.table(
-        {
-            "block_id": state_tbl.column("block_id"),
-            "lo": state_tbl.column("lo"),
-            "hi": state_tbl.column("hi"),
-            "mask": state_tbl.column("mask"),
-            "labels": pa.array([new.tobytes()], pa.binary()),
-            "block_changed": pa.array([changed], pa.int64()),
-        }
+    return LabelPropResult(
+        labels=run.explode("label"),
+        iterations=run.iterations,
+        changed_per_iter=run.metric("block_changed"),
+        iter_seconds=run.iter_seconds,
     )

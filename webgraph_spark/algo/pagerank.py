@@ -11,42 +11,28 @@ redistribution)::
     r'[v] = (1-a)/n + a * ( sum_{u->v} r[u]/outdeg(u)  +  dangling_mass/n )
     dangling_mass = 1 - sum_{u: outdeg(u)>0} r[u]        (since sum r == 1)
 
-Two execution strategies, differentially tested against each other and a
-driver numpy oracle:
+Execution paths, differentially tested against each other and driver
+numpy oracles:
 
-- :func:`pagerank` — the scale path. Each iteration cogroups the CSR block
-  table with the rank table on ``block_id`` (ranks get their block id by
-  vectorized binary search over the same cuts — no join needed; the block
-  table is persisted pre-partitioned on block_id so the graph side is never
-  re-exchanged), runs a numpy gather-scatter per block (rank/deg gathered by
-  searchsorted, partials combined per dst with bincount — a map-side
-  combine), then a single ``groupBy(dst).sum`` shuffle whose input is
-  already reduced to at most one row per (block, dst). The dangling mass
-  for iteration t is the non-dangling rank sum measured at the END of
-  iteration t-1 — it rides on the same aggregate as the L1 delta, so one
-  iteration is exactly two driver actions (update job + one aggregate).
-  (:func:`personalized_pagerank` still uses the kernel's dst=-1 sentinel
-  row for the same quantity.)
-
-- :func:`pagerank_edges` — plain DataFrame join/agg formulation, used as the
-  differential oracle and as the SQL-expressible fixed-iteration variant.
+- :func:`webgraph_spark.algo.pagerank_block.pagerank_block` — the scale
+  path: rank state as dense per-block vectors on the shared block-vector
+  fixpoint engine (:mod:`webgraph_spark.plans.blockvec`).
+  :func:`personalized_pagerank` is that kernel with a teleport set.
+- :func:`pagerank_edges` / :func:`pagerank_weighted` — plain DataFrame
+  join/agg formulations, used as differential oracles and as the
+  SQL-expressible fixed-iteration variants.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from webgraph_spark.plans.csr import CsrGraph
 from webgraph_spark.plans.iterate import checkpoint_state
-
-from webgraph_spark.plans.csr import CsrGraph, decode_block
-
-_DANGLING_KEY = -1
 
 
 @dataclass
@@ -56,222 +42,6 @@ class PageRankResult:
     deltas: list[float] = field(default_factory=list)
     iter_seconds: list[float] = field(default_factory=list)
     converged: bool = False
-
-
-def _spmv_arrow_kernel_factory():
-    """Arrow-native kernel for cogroup(csr_blocks, ranks) — zero-copy in
-    (block buffers stay Arrow), zero-copy out (RecordBatch wraps the numpy
-    outputs). ~2× the pandas kernel's throughput: no pandas block
-    consolidation on the 10M+-row output, no list-cell materialization."""
-    import pyarrow as pa
-
-    def kernel(blocks_tbl: "pa.Table", ranks_tbl: "pa.Table") -> "pa.Table":
-        schema = pa.schema([("dst", pa.int64()), ("val", pa.float64())])
-        if ranks_tbl.num_rows == 0:
-            return pa.table(
-                {"dst": pa.array([], pa.int64()), "val": pa.array([], pa.float64())}
-            )
-        rid = ranks_tbl.column("id").to_numpy(zero_copy_only=False)
-        rval = ranks_tbl.column("rank").to_numpy(zero_copy_only=False)
-        order = np.argsort(rid)
-        rid, rval = rid[order], rval[order]
-        out_dst: list[np.ndarray] = []
-        out_val: list[np.ndarray] = []
-        nd_partial = 0.0
-        srcs_col = blocks_tbl.column("srcs")
-        degs_col = blocks_tbl.column("degs")
-        succ_col = blocks_tbl.column("succ")
-        for i in range(blocks_tbl.num_rows):
-            srcs = np.asarray(srcs_col[i].values, dtype=np.int64)
-            degs = np.asarray(degs_col[i].values, dtype=np.int64)
-            succ_bytes = succ_col[i].as_py()
-            srcs, indptr, succs = decode_block(srcs, degs, succ_bytes)
-            pos = np.searchsorted(rid, srcs)
-            src_rank = rval[pos]
-            nd_partial += float(src_rank.sum())
-            d = np.diff(indptr)
-            per_edge = np.repeat(src_rank / d, d)
-            counts = np.bincount(succs, weights=per_edge)
-            nz = np.flatnonzero(counts)
-            out_dst.append(nz)
-            out_val.append(counts[nz])
-        out_dst.append(np.array([_DANGLING_KEY], dtype=np.int64))
-        out_val.append(np.array([nd_partial], dtype=np.float64))
-        return pa.table(
-            {
-                "dst": pa.array(np.concatenate(out_dst), pa.int64()),
-                "val": pa.array(np.concatenate(out_val), pa.float64()),
-            },
-            schema=schema,
-        )
-
-    return kernel
-
-
-def _spmv_kernel_factory():
-    """Kernel for cogroup(csr_blocks, ranks) -> pre-aggregated contributions."""
-
-    def kernel(key, blocks_pdf: pd.DataFrame, ranks_pdf: pd.DataFrame) -> pd.DataFrame:
-        if ranks_pdf.empty:
-            return pd.DataFrame({"dst": pd.Series(dtype="int64"),
-                                 "val": pd.Series(dtype="float64")})
-        rid = ranks_pdf["id"].to_numpy(np.int64)
-        rval = ranks_pdf["rank"].to_numpy(np.float64)
-        order = np.argsort(rid)
-        rid, rval = rid[order], rval[order]
-        out_dst: list[np.ndarray] = []
-        out_val: list[np.ndarray] = []
-        nd_partial = 0.0
-        for _, row in blocks_pdf.iterrows():
-            srcs, indptr, succs = decode_block(
-                np.asarray(row["srcs"], dtype=np.int64),
-                np.asarray(row["degs"], dtype=np.int64),
-                row["succ"],
-            )
-            pos = np.searchsorted(rid, srcs)
-            # Every src must have a rank row in its own block range.
-            src_rank = rval[pos]
-            nd_partial += float(src_rank.sum())
-            degs = np.diff(indptr)
-            per_edge = np.repeat(src_rank / degs, degs)
-            # Dense ids -> direct weighted bincount (O(edges + max_id),
-            # no sort): ~5x faster than unique+bincount per block.
-            counts = np.bincount(succs, weights=per_edge)
-            nz = np.flatnonzero(counts)
-            out_dst.append(nz)
-            out_val.append(counts[nz])
-        out_dst.append(np.array([_DANGLING_KEY], dtype=np.int64))
-        out_val.append(np.array([nd_partial], dtype=np.float64))
-        return pd.DataFrame(
-            {"dst": np.concatenate(out_dst), "val": np.concatenate(out_val)}
-        )
-
-    return kernel
-
-
-def pagerank(
-    spark: SparkSession,
-    csr: CsrGraph,
-    nodes: DataFrame,
-    alpha: float = 0.85,
-    tol: float = 1e-9,
-    max_iter: int = 200,
-    checkpointer=None,
-    initial_ranks: DataFrame | None = None,
-    start_iteration: int = 0,
-) -> PageRankResult:
-    """CSR-kernel PageRank to convergence (L1 delta < tol).
-
-    ``nodes`` is the full node table ``(id)`` (dangling nodes included).
-    ``checkpointer`` (optional :class:`webgraph_spark.checkpoint.CheckpointManager`)
-    persists per-iteration state + lineage and enables resume via
-    ``initial_ranks``/``start_iteration``.
-    """
-    n = nodes.count()
-    # Persist the CSR table ALREADY hash-partitioned and sorted on block_id:
-    # the cogroup's required distribution is then satisfied by the cached
-    # partitioning, so the graph (the big side) is shuffled ZERO times per
-    # iteration — only the small rank table moves. Without this, every
-    # iteration re-exchanges the whole compressed graph (verified via
-    # .explain: Exchange+Sort above the InMemoryTableScan disappear).
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    blocks = (
-        csr.blocks.repartition(shuffle_parts, "block_id")
-        .sortWithinPartitions("block_id")
-        .persist()
-    )
-    blocks.count()  # materialize once; reused every iteration
-    # has-out flag per node: the dangling mass of iteration t is known at
-    # the END of iteration t-1 (sum of rank over non-dangling nodes rides
-    # on the same checkpoint scan as the L1 delta) — so each iteration is
-    # exactly TWO driver actions: the update job and one aggregate. No
-    # dangling collect, no sums persist/unpersist.
-    srcs = blocks.select(F.explode("srcs").alias("id")).distinct()
-    n_src = srcs.count()
-    nodes = (
-        nodes.select("id")
-        .join(srcs.withColumn("__has_out", F.lit(1.0)), "id", "left")
-        .na.fill({"__has_out": 0.0})
-        .persist()
-    )
-
-    bid_col = csr.node_block_id_col("id")
-    if initial_ranks is not None:
-        ranks = nodes.join(initial_ranks.select("id", "rank"), "id")
-        ranks = ranks.transform(checkpoint_state)
-        non_dangling = float(
-            ranks.agg(F.sum(F.col("rank") * F.col("__has_out"))).collect()[0][0]
-            or 0.0
-        )
-    else:
-        ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-        non_dangling = n_src / n
-
-    kernel = _spmv_arrow_kernel_factory()
-    result = PageRankResult(ranks=ranks, iterations=start_iteration)
-    for it in range(start_iteration, max_iter):
-        t0 = time.monotonic()
-        ranks_b = ranks.select("id", "rank").withColumn("block_id", bid_col)
-        contribs = (
-            blocks.groupby("block_id")
-            .cogroup(ranks_b.groupby("block_id"))
-            .applyInArrow(kernel, schema="dst long, val double")
-        )
-        # One shuffle: inputs are pre-combined to <=1 row per (block, dst).
-        sums = (
-            contribs.filter(F.col("dst") >= 0)
-            .groupBy("dst")
-            .agg(F.sum("val").alias("contrib"))
-        )
-        dangling = 1.0 - non_dangling
-        base = (1.0 - alpha) / n + alpha * dangling / n
-        updated = (
-            ranks.join(sums.withColumnRenamed("dst", "id"), "id", "left")
-            .select(
-                "id",
-                "__has_out",
-                (
-                    F.lit(base)
-                    + F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("new_rank"),
-                F.col("rank").alias("old_rank"),
-            )
-            .select(
-                "id",
-                "__has_out",
-                F.col("new_rank").alias("rank"),
-                F.abs(F.col("new_rank") - F.col("old_rank")).alias("__delta"),
-            )
-        )
-        # ONE action per iteration: the L1 delta and next iteration's
-        # non-dangling mass ride on the eager checkpoint job itself as
-        # observed metrics — no separate aggregate scan, halving the
-        # per-iteration serial floor.
-        obs = Observation()
-        updated = updated.observe(
-            obs,
-            F.sum("__delta").alias("d"),
-            F.sum(F.col("rank") * F.col("__has_out")).alias("nd"),
-        ).transform(checkpoint_state)
-        agg = obs.get
-        delta = agg["d"]
-        non_dangling = float(agg["nd"] or 0.0)
-        new_ranks = updated.select("id", "__has_out", "rank")
-        wall = time.monotonic() - t0
-        result.deltas.append(float(delta))
-        result.iter_seconds.append(wall)
-        result.iterations = it + 1
-        if checkpointer is not None:
-            checkpointer.save_iteration(
-                updated.select("id", "rank"), it + 1, wall_s=wall,
-                delta=float(delta),
-            )
-        ranks = new_ranks
-        if delta < tol:
-            result.converged = True
-            break
-    result.ranks = ranks.select("id", "rank")
-    return result
 
 
 def pagerank_edges(
@@ -395,89 +165,16 @@ def personalized_pagerank(
     ``sources`` set uniformly instead of all nodes.
 
     No reference counterpart (the reference has no PageRank at all); the
-    standard PPR definition with the same CSR SpMV kernel. Nodes outside
-    the reachable set of ``sources`` converge to rank 0.
+    standard PPR definition, run as the block kernel with ``sources`` as
+    its teleport set. Nodes outside the reachable set of ``sources``
+    converge to rank 0.
     """
-    n_src = sources.count()
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    blocks = (
-        csr.blocks.repartition(shuffle_parts, "block_id")
-        .sortWithinPartitions("block_id")
-        .persist()
-    )
-    blocks.count()
-    srcs_with_out = blocks.select(F.explode("srcs").alias("id")).distinct()
-    src_flag = sources.select("id").withColumn("__is_src", F.lit(1.0))
-    base_nodes = (
-        nodes.select("id")
-        .join(src_flag, "id", "left")
-        .join(srcs_with_out.withColumn("__has_out", F.lit(1.0)), "id", "left")
-        .na.fill({"__is_src": 0.0, "__has_out": 0.0})
-        .persist()
-    )
-    ranks = base_nodes.select(
-        "id", "__is_src", "__has_out", (F.col("__is_src") / n_src).alias("rank")
-    ).transform(checkpoint_state)
-    # non-dangling mass of the initial vector: sources that have out-arcs
-    non_dangling = (
-        base_nodes.filter(F.col("__is_src") > 0)
-        .agg(F.sum(F.col("__has_out") / n_src))
-        .collect()[0][0]
-        or 0.0
-    )
+    from webgraph_spark.algo.pagerank_block import pagerank_block
 
-    bid_col = csr.node_block_id_col("id")
-    kernel = _spmv_kernel_factory()
-    result = PageRankResult(ranks=ranks, iterations=0)
-    for it in range(max_iter):
-        t0 = time.monotonic()
-        ranks_b = ranks.select("id", "rank").withColumn("block_id", bid_col)
-        contribs = (
-            blocks.groupby("block_id")
-            .cogroup(ranks_b.groupby("block_id"))
-            .applyInPandas(kernel, schema="dst long, val double")
-        )
-        sums = (
-            contribs.filter(F.col("dst") >= 0)
-            .groupBy("dst")
-            .agg(F.sum("val").alias("contrib"))
-        )
-        dangling = 1.0 - float(non_dangling)
-        # teleport + dangling mass concentrate on the source set
-        src_mass = (1.0 - alpha) / n_src + alpha * dangling / n_src
-        new_rank = (
-            F.col("__is_src") * F.lit(src_mass)
-            + F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
-        )
-        obs = Observation()
-        updated = (
-            ranks.join(sums.withColumnRenamed("dst", "id"), "id", "left")
-            .select(
-                "id",
-                "__is_src",
-                "__has_out",
-                new_rank.alias("rank"),
-                F.abs(new_rank - F.col("rank")).alias("__delta"),
-            )
-            .observe(
-                obs,
-                F.sum("__delta").alias("d"),
-                F.sum(F.col("rank") * F.col("__has_out")).alias("nd"),
-            )
-            .transform(checkpoint_state)
-        )
-        agg = obs.get
-        delta = float(agg["d"])
-        non_dangling = float(agg["nd"] or 0.0)
-        ranks = updated.select("id", "__is_src", "__has_out", "rank")
-        result.deltas.append(delta)
-        result.iter_seconds.append(time.monotonic() - t0)
-        result.iterations = it + 1
-        if delta < tol:
-            result.converged = True
-            break
-    result.ranks = ranks.select("id", "rank")
-    return result
+    return pagerank_block(
+        spark, csr, nodes, alpha=alpha, tol=tol, max_iter=max_iter,
+        teleport=sources,
+    )
 
 
 def pagerank_weighted(

@@ -1,73 +1,85 @@
-"""Block-vector PageRank: rank state as per-block dense vectors.
+"""Block-vector PageRank on the shared fixpoint engine.
 
-The row-state kernel (:func:`webgraph_spark.algo.pagerank.pagerank`) emits
-up to one contribution row per (block, dst) — ~m/2 rows per iteration on
-real graphs, and its update join exchanges the O(n) rank table three times
-per iteration. This variant keeps the ENTIRE rank state as one dense
-``array<double>`` per CSR block (covering the block's node-id range under
-the same degree-balanced cuts), so one iteration is:
+Rank state is one dense vector per CSR block (:mod:`webgraph_spark.plans
+.blockvec`), next to each node's out-degree, its teleport membership and
+the extrapolation snapshot. One iteration:
 
-1. cogroup(csr_blocks, state) on block_id — the graph side is cached
-   pre-partitioned (never re-exchanged); the state side is B rows.
-   The kernel gathers src ranks by direct slot indexing (``id - lo``,
-   no searchsorted) and scatters contributions into ONE partial vector
-   per destination block: **B rows out per source block, B² rows per
-   iteration** instead of ~m/2. Sub-threshold-density pairs fall back to
-   (slots, vals) sparse arrays — still one row per block pair.
-2. shuffle those B² rows by dst_block (bytes ≈ n·8 when dense — the same
-   order as the state itself, independent of m).
-3. cogroup(partials, state) on block_id: reduce partial vectors, apply
-   teleport + dangling mass, compute per-block L1 delta and non-dangling
-   mass as COLUMNS; the global Σ|Δ| and Σ(rank·has_out) ride the eager
-   checkpoint as observed metrics — one shuffle of B rows + one action.
+1. gather, per (src_block, dst_block) pair of the cached slot-form:
+   ``r[src] / deg[src]`` per edge, scattered into ONE partial per pair —
+   a dense vector when the pair's edges fill at least ``DENSE_THRESHOLD``
+   of the destination span, else (slots, vals) sparse arrays, so the
+   shuffle stays ≤ min(dense, sparse) at any block count;
+2. fold: sum the partials, apply teleport + dangling mass, and write the
+   block's L1 delta and non-dangling mass (Σ rank over ``deg > 0``) as
+   columns; their global sums ride the eager checkpoint as observed
+   metrics.
 
-Scale notes: state bytes per iteration are O(id-range) not O(m); the dense
-form assumes reasonably dense node ids (a compacting permutation — see
-``sources/ids.mint_dense_ids`` — is the standard preprocessing, exactly as
-WebGraph renumbers to 0..n-1). At B blocks the dense emission is B·range
-bytes per source block; the kernel switches per pair to sparse arrays below
-``dense_threshold`` occupancy, which keeps the shuffle ≤ min(dense, sparse)
-at any block count. The dangling/teleport term is a driver broadcast
-(north_star requirement), measured on the previous iteration's checkpoint
-via ``observe`` — one Spark action per iteration total.
+The teleport + dangling term of iteration t comes from the non-dangling
+mass observed at the end of iteration t-1 — a driver scalar that rides the
+shared state frame as a column (north_star: driver broadcast), so an
+iteration stays three Spark jobs.
 """
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
-import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from webgraph_spark.plans.iterate import checkpoint_state
-
 from webgraph_spark.algo.pagerank import PageRankResult
-from webgraph_spark.plans.csr import CsrGraph, decode_block
-
-_STATE_SCHEMA = (
-    "block_id long, lo long, hi long, mask binary, has_out binary, "
-    "ranks binary, prev binary, block_delta double, block_nd double"
-)
+from webgraph_spark.plans.blockvec import BlockSpec, fixpoint
+from webgraph_spark.plans.csr import CsrGraph
 
 _STRIDE = 6  # extrapolation stride: kills modes with lambda^6 = alpha^6
 
-_PARTIAL_SCHEMA = "dst_block long, slots array<long>, vals binary"
-
-_SLOTFORM_SCHEMA = (
-    "src_block long, dst_block long, dense boolean, "
-    "src_slot binary, deg binary, dst_idx binary, uniq_slots binary"
-)
+# a block pair whose edges cover at least this fraction of the destination
+# span ships a dense partial vector; sparser pairs ship (slots, vals)
+DENSE_THRESHOLD = 0.05
 
 
-def _block_ranges(state_rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(block_ids, lo, hi) arrays for driver-side broadcast into kernels."""
-    bid = np.array([r["block_id"] for r in state_rows], dtype=np.int64)
-    lo = np.array([r["lo"] for r in state_rows], dtype=np.int64)
-    hi = np.array([r["hi"] for r in state_rows], dtype=np.int64)
-    order = np.argsort(bid)
-    return bid[order], lo[order], hi[order]
+def _gather(st, ss, ds):
+    vals = st["ranks"][ss] / st["deg"][ss]
+    if ds.size >= DENSE_THRESHOLD * (int(ds.max()) + 1):
+        return None, np.bincount(ds, weights=vals).tobytes()
+    # sparse pair: pre-combine duplicates, emit (slots, vals)
+    uniq, inv = np.unique(ds, return_inverse=True)
+    return uniq.astype(np.int32).tobytes(), np.bincount(inv, weights=vals).tobytes()
+
+
+def _fold_factory(alpha: float):
+    def fold(st, parts):
+        mask, tele, old = st["mask"], st["tele"], st["ranks"]
+        acc = np.zeros(old.size)
+        for slots, vals in zip(parts.column("slots"), parts.column("vals")):
+            vals = np.frombuffer(vals.as_py(), dtype=np.float64)
+            if slots.is_valid:
+                np.add.at(acc, np.frombuffer(slots.as_py(), np.int32), vals)
+            else:
+                acc[: vals.size] += vals
+        new = mask * (alpha * acc) + tele * st["__base"]
+        out = {}
+        if st["__extrap"]:
+            # A_{alpha^s} power extrapolation (stride s = 6; Kamvar et al.
+            # 2003 generalized): the Google matrix's subdominant spectrum
+            # has modulus <= alpha, with the bulk EXACTLY at alpha times a
+            # low-order root of unity (2-cycles, layered 3-cycles), so
+            #   x* = (x_k - alpha^s x_{k-s}) / (1 - alpha^s)
+            # annihilates every mode with lambda^s = alpha^s while scaling
+            # any other mode by |lambda^s - alpha^s|/(1 - alpha^s) <=
+            # 2 alpha^s/(1-alpha^s)  (~1.2 at alpha=.85, s=6) — it can slow
+            # an iteration slightly but can never diverge. The fixed point
+            # is unchanged and mass is preserved. x_{k-s} comes from the
+            # snapshot taken s iterations earlier via the __snap flag.
+            a_s = alpha ** _STRIDE
+            new = mask * ((new - a_s * st["prev"]) / (1.0 - a_s))
+        if st["__snap"]:
+            out["prev"] = new
+        out["ranks"] = new
+        out["block_delta"] = float(np.abs(new - old).sum())
+        out["block_nd"] = float((new * (st["deg"] > 0)).sum())
+        return out
+
+    return fold
 
 
 def pagerank_block(
@@ -77,14 +89,24 @@ def pagerank_block(
     alpha: float = 0.85,
     tol: float = 1e-9,
     max_iter: int = 200,
-    dense_threshold: float = 0.05,
     extrapolate: bool | int | None = None,
-    precompute_slots: bool = True,
     checkpointer=None,
     initial_state: DataFrame | None = None,
     start_iteration: int = 0,
+    initial: DataFrame | None = None,
+    teleport: DataFrame | None = None,
 ) -> PageRankResult:
     """CSR block-vector PageRank to convergence (L1 delta < tol).
+
+    ``nodes`` is the full node table ``(id)``, dangling nodes included; it
+    must cover every edge endpoint (``ValueError`` otherwise).
+
+    ``teleport`` ``(id)`` restricts the teleport (and dangling) mass to that
+    node set, uniformly — personalized PageRank; default all nodes. The
+    cold start is the teleport distribution. ``initial`` ``(id, rank)``
+    warm-starts from a previous rank vector; nodes it misses start cold.
+    ``checkpointer`` saves every iteration's block state, and
+    ``initial_state``/``start_iteration`` resume from one.
 
     ``extrapolate=True`` enables ADAPTIVE A_{alpha^6} power extrapolation
     (Kamvar et al. 2003, generalized to stride 6): when the driver-observed
@@ -99,308 +121,54 @@ def pagerank_block(
     fixed point is unchanged either way, and the L1 < tol stop criterion
     still measures a genuine successive-iterate delta. Leave ``None`` for
     fixed-iteration runs that must match a term-by-term oracle.
-
-    ``precompute_slots=True`` (default) decodes the CSR varint stream ONCE
-    into a cached slot-coordinate form — per (src_block, dst_block) pair:
-    edge-aligned int32 ``src_slot``/``deg`` arrays plus pre-uniqued sparse
-    destination indices — so every iteration's kernel is a pure
-    gather + divide + ``bincount`` with no varint decode, no searchsorted,
-    no ``np.unique``. Costs ~12 bytes/edge of cache (vs ~1-2 bytes/edge for
-    the varint CSR) — the classic memory-for-CPU trade; pass ``False`` on
-    memory-constrained clusters to re-decode per iteration. The per-edge
-    arithmetic (same edge order, same r/d division, same bincount
-    accumulation) is bitwise-identical between the two paths.
     """
     n = nodes.count()
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    blocks = (
-        csr.blocks.repartition(shuffle_parts, "block_id")
-        .sortWithinPartitions("block_id")
-        .persist()
-    )
-    blocks.count()
-
-    r0 = 1.0 / n
-
-    def init_kernel(key, pdf):
-        import pandas as pd
-
-        ids = pdf["id"].to_numpy(np.int64)
-        ho = pdf["__has_out"].to_numpy(np.float64)
-        lo, hi = int(ids.min()), int(ids.max())
-        width = hi - lo + 1
-        mask = np.zeros(width)
-        has_out = np.zeros(width)
-        mask[ids - lo] = 1.0
-        has_out[ids - lo] = ho
-        ranks = mask * r0
-        return pd.DataFrame(
-            {
-                "block_id": [int(key[0])],
-                "lo": [lo],
-                "hi": [hi],
-                "mask": [mask.tobytes()],
-                "has_out": [has_out.tobytes()],
-                "ranks": [ranks.tobytes()],
-                "prev": [np.zeros(width).tobytes()],
-                "block_delta": [0.0],
-                "block_nd": [float((ranks * has_out).sum())],
-            }
-        )
+    ids = nodes.select("id")
+    if teleport is None:
+        n_t = n
+        tagged = ids.withColumn("tele", F.lit(1))
+    else:
+        tele = teleport.select("id").distinct().withColumn("tele", F.lit(1))
+        tagged = ids.join(tele, "id", "left").na.fill({"tele": 0})
+        n_t = tagged.filter(F.col("tele") == 1).count()
 
     if initial_state is not None:
-        # resume: the checkpointed state frame IS the full kernel state —
-        # per-block rank/prev vectors plus the non-dangling mass column the
-        # next iteration's teleport term needs (no graph re-scan required)
-        state = initial_state.select(
-            "block_id", "lo", "hi", "mask", "has_out", "ranks", "prev",
-            "block_delta", "block_nd",
-        ).transform(checkpoint_state)
-        nd_row = state.agg(F.sum("block_nd").alias("nd")).collect()[0]
-        non_dangling = float(nd_row["nd"] or 0.0)
+        # the checkpointed state carries the non-dangling mass the next
+        # iteration's teleport term needs
+        non_dangling = float(
+            initial_state.agg(F.sum("block_nd")).collect()[0][0] or 0.0
+        )
     else:
-        srcs = blocks.select(F.explode("srcs").alias("id")).distinct()
-        n_src = srcs.count()
-        flagged = (
-            nodes.select("id")
-            .join(srcs.withColumn("__has_out", F.lit(1.0)), "id", "left")
-            .na.fill({"__has_out": 0.0})
-            .withColumn("block_id", csr.node_block_id_col("id"))
+        deg = csr.blocks.select(
+            F.explode(F.arrays_zip("srcs", "degs")).alias("s")
+        ).select(
+            F.col("s.srcs").alias("id"), F.col("s.degs").cast("double").alias("deg")
         )
-        state = (
-            flagged.groupBy("block_id")
-            .applyInPandas(init_kernel, schema=_STATE_SCHEMA)
-            .transform(checkpoint_state)
-        )
-        non_dangling = None  # filled below once n_src is known
-    ranges = _block_ranges(state.select("block_id", "lo", "hi").collect())
-    rng_bid, rng_lo, rng_hi = ranges
-    cuts = np.asarray(csr.cuts, dtype=np.int64)
-    if non_dangling is None:
-        non_dangling = n_src / n
-
-    def spmv_kernel(blocks_tbl: "pa.Table", state_tbl: "pa.Table") -> "pa.Table":
-        out_dstb: list[int] = []
-        out_slots: list[object] = []
-        out_vals: list[bytes] = []
-        if state_tbl.num_rows:
-            lo = int(state_tbl.column("lo")[0].as_py())
-            rvec = np.frombuffer(
-                state_tbl.column("ranks")[0].as_py(), dtype=np.float64
-            )
-            srcs_col = blocks_tbl.column("srcs")
-            degs_col = blocks_tbl.column("degs")
-            succ_col = blocks_tbl.column("succ")
-            for i in range(blocks_tbl.num_rows):
-                srcs = np.asarray(srcs_col[i].values, dtype=np.int64)
-                degs = np.asarray(degs_col[i].values, dtype=np.int64)
-                srcs, indptr, succs = decode_block(
-                    srcs, degs, succ_col[i].as_py()
-                )
-                src_rank = rvec[srcs - lo]
-                d = np.diff(indptr)
-                per_edge = np.repeat(src_rank / d, d)
-                # split successors by destination block (succs sorted per
-                # list, not globally — searchsorted over the few cuts)
-                dblk = np.searchsorted(cuts, succs, side="left")
-                for b in np.unique(dblk):
-                    sel = dblk == b
-                    pos = int(np.searchsorted(rng_bid, b))
-                    if pos >= rng_bid.size or rng_bid[pos] != b:
-                        continue  # no real nodes in that block range
-                    blo, bhi = int(rng_lo[pos]), int(rng_hi[pos])
-                    width = bhi - blo + 1
-                    dsts = succs[sel] - blo
-                    vals = per_edge[sel]
-                    if dsts.size >= dense_threshold * width:
-                        acc = np.bincount(
-                            dsts, weights=vals, minlength=width
-                        )[:width]
-                        out_dstb.append(int(b))
-                        out_slots.append(None)
-                        out_vals.append(acc.tobytes())
-                    else:
-                        # sparse pair: pre-combine duplicates, emit arrays
-                        uniq, inv = np.unique(dsts, return_inverse=True)
-                        acc = np.bincount(inv, weights=vals)
-                        out_dstb.append(int(b))
-                        out_slots.append(uniq.tolist())
-                        out_vals.append(acc.tobytes())
-        return pa.table(
-            {
-                "dst_block": pa.array(out_dstb, pa.int64()),
-                "slots": pa.array(out_slots, pa.list_(pa.int64())),
-                "vals": pa.array(out_vals, pa.binary()),
-            }
-        )
-
-    slotform = None
-    if precompute_slots:
-        # reuse a previously built slot-form for the SAME layout: keyed by
-        # the shuffle width, density threshold, and the node-range layout
-        # (block ids + lo bounds) that slot coordinates are relative to.
-        # Typical pattern served: a fixed-iteration run followed by a
-        # run-to-convergence on one CsrGraph pays the decode+shuffle once.
-        cache_key = (
-            shuffle_parts,
-            float(dense_threshold),
-            rng_bid.tobytes(),
-            rng_lo.tobytes(),
-        )
-        cached = getattr(csr, "_slotform_cache", None)
-        if cached is not None and cached[0] == cache_key:
-            slotform = cached[1]
-            blocks.unpersist()  # the cached slot-form replaces it entirely
-
-    if precompute_slots and slotform is None:
-
-        def slotform_kernel(batches):
-            for batch in batches:
-                rows: dict[str, list] = {
-                    "src_block": [], "dst_block": [], "dense": [],
-                    "src_slot": [], "deg": [], "dst_idx": [], "uniq_slots": [],
-                }
-                bid_col = batch.column("block_id")
-                srcs_col = batch.column("srcs")
-                degs_col = batch.column("degs")
-                succ_col = batch.column("succ")
-                for i in range(batch.num_rows):
-                    srcs = np.asarray(srcs_col[i].values, dtype=np.int64)
-                    degs = np.asarray(degs_col[i].values, dtype=np.int64)
-                    srcs, indptr, succs = decode_block(
-                        srcs, degs, succ_col[i].as_py()
-                    )
-                    b_src = int(bid_col[i].as_py())
-                    pos = int(np.searchsorted(rng_bid, b_src))
-                    if pos >= rng_bid.size or rng_bid[pos] != b_src:
-                        continue  # block range holds no real nodes
-                    lo = int(rng_lo[pos])
-                    d = np.diff(indptr)
-                    src_slot = (np.repeat(srcs, d) - lo).astype(np.int32)
-                    degrep = np.repeat(d, d).astype(np.int32)
-                    dblk = np.searchsorted(cuts, succs, side="left")
-                    for b in np.unique(dblk):
-                        sel = dblk == b
-                        pos2 = int(np.searchsorted(rng_bid, b))
-                        if pos2 >= rng_bid.size or rng_bid[pos2] != b:
-                            continue
-                        blo = int(rng_lo[pos2])
-                        width = int(rng_hi[pos2]) - blo + 1
-                        dsts = succs[sel] - blo
-                        rows["src_block"].append(b_src)
-                        rows["dst_block"].append(int(b))
-                        rows["src_slot"].append(src_slot[sel].tobytes())
-                        rows["deg"].append(degrep[sel].tobytes())
-                        if dsts.size >= dense_threshold * width:
-                            rows["dense"].append(True)
-                            rows["dst_idx"].append(
-                                dsts.astype(np.int32).tobytes()
-                            )
-                            rows["uniq_slots"].append(b"")
-                        else:
-                            uniq, inv = np.unique(dsts, return_inverse=True)
-                            rows["dense"].append(False)
-                            rows["dst_idx"].append(
-                                inv.astype(np.int32).tobytes()
-                            )
-                            rows["uniq_slots"].append(
-                                uniq.astype(np.int32).tobytes()
-                            )
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "src_block": pa.array(rows["src_block"], pa.int64()),
-                        "dst_block": pa.array(rows["dst_block"], pa.int64()),
-                        "dense": pa.array(rows["dense"], pa.bool_()),
-                        "src_slot": pa.array(rows["src_slot"], pa.binary()),
-                        "deg": pa.array(rows["deg"], pa.binary()),
-                        "dst_idx": pa.array(rows["dst_idx"], pa.binary()),
-                        "uniq_slots": pa.array(rows["uniq_slots"], pa.binary()),
-                    }
-                )
-
-        slotform = (
-            blocks.mapInArrow(slotform_kernel, schema=_SLOTFORM_SCHEMA)
-            .repartition(shuffle_parts, "src_block")
-            .sortWithinPartitions("src_block")
-            .persist()
-        )
-        slotform.count()
-        blocks.unpersist()
-        csr._slotform_cache = (cache_key, slotform)
-
-    if precompute_slots:
-
-        def spmv_slots_kernel(
-            slot_tbl: "pa.Table", state_tbl: "pa.Table"
-        ) -> "pa.Table":
-            out_dstb: list[int] = []
-            out_slots: list[object] = []
-            out_vals: list[bytes] = []
-            if state_tbl.num_rows and slot_tbl.num_rows:
-                rvec = np.frombuffer(
-                    state_tbl.column("ranks")[0].as_py(), dtype=np.float64
-                )
-                dstb_col = slot_tbl.column("dst_block")
-                dense_col = slot_tbl.column("dense")
-                ss_col = slot_tbl.column("src_slot")
-                deg_col = slot_tbl.column("deg")
-                di_col = slot_tbl.column("dst_idx")
-                uq_col = slot_tbl.column("uniq_slots")
-                for i in range(slot_tbl.num_rows):
-                    ss = np.frombuffer(ss_col[i].as_py(), dtype=np.int32)
-                    dd = np.frombuffer(deg_col[i].as_py(), dtype=np.int32)
-                    vals = rvec[ss] / dd
-                    di = np.frombuffer(di_col[i].as_py(), dtype=np.int32)
-                    b = int(dstb_col[i].as_py())
-                    if dense_col[i].as_py():
-                        pos = int(np.searchsorted(rng_bid, b))
-                        width = int(rng_hi[pos]) - int(rng_lo[pos]) + 1
-                        acc = np.bincount(di, weights=vals, minlength=width)[
-                            :width
-                        ]
-                        out_dstb.append(b)
-                        out_slots.append(None)
-                        out_vals.append(acc.tobytes())
-                    else:
-                        uniq = np.frombuffer(
-                            uq_col[i].as_py(), dtype=np.int32
-                        ).astype(np.int64)
-                        acc = np.bincount(di, weights=vals, minlength=uniq.size)
-                        out_dstb.append(b)
-                        out_slots.append(uniq.tolist())
-                        out_vals.append(acc.tobytes())
-            return pa.table(
-                {
-                    "dst_block": pa.array(out_dstb, pa.int64()),
-                    "slots": pa.array(out_slots, pa.list_(pa.int64())),
-                    "vals": pa.array(out_vals, pa.binary()),
-                }
-            )
-
-    result = PageRankResult(ranks=None, iterations=start_iteration)
-    update_kernel = _update_kernel_factory(alpha)
-    armed_at: int | None = None
-    for it in range(start_iteration, max_iter):
-        t0 = time.monotonic()
-        dangling = 1.0 - non_dangling
-        base = (1.0 - alpha) / n + alpha * dangling / n
-
-        if precompute_slots:
-            partials = (
-                slotform.groupby("src_block")
-                .cogroup(state.groupby("block_id"))
-                .applyInArrow(spmv_slots_kernel, schema=_PARTIAL_SCHEMA)
-            )
+        cold = F.when(F.col("tele") == 1, F.lit(1.0 / n_t)).otherwise(0.0)
+        tagged = tagged.join(deg, "id", "left").na.fill({"deg": 0.0})
+        if initial is not None:
+            tagged = tagged.join(initial.select("id", "rank"), "id", "left")
+            cold = F.coalesce("rank", cold)
+        tagged = tagged.withColumns({"ranks": cold, "prev": F.lit(0.0)}).persist()
+        if initial is None:
+            has_out = (F.col("deg") > 0) & (F.col("tele") == 1)
+            non_dangling = tagged.filter(has_out).count() / n_t
         else:
-            partials = (
-                blocks.groupby("block_id")
-                .cogroup(state.groupby("block_id"))
-                .applyInArrow(spmv_kernel, schema=_PARTIAL_SCHEMA)
+            non_dangling = float(
+                tagged.agg(F.sum(F.when(F.col("deg") > 0, F.col("ranks"))))
+                .collect()[0][0] or 0.0
             )
+
+    armed_at: int | None = None
+
+    def scalars(records):
         # adaptive A_{alpha^6}: arm a snapshot while the L1 contraction
         # ratio sits at ~alpha; fire the extrapolation exactly _STRIDE
         # iterations later if it still does (see docstring)
-        d = result.deltas
+        nonlocal armed_at
+        it = len(records)
+        nd = records[-1].metrics["block_nd"] if records else non_dangling
+        d = [r.metrics["block_delta"] for r in records]
         alpha_dominated = (
             len(d) >= 3
             and d[-2] > 0
@@ -419,149 +187,29 @@ def pagerank_block(
             armed_at = it
         if armed_at is not None and it >= armed_at + _STRIDE:
             armed_at = None  # fired or gone stale — re-arm on next signal
-        obs = Observation()
-        # base (teleport + dangling term) and the extrapolation flags are
-        # broadcast as columns so the kernel function object is created
-        # ONCE — a fresh closure per iteration would re-pickle and
-        # re-register a new UDF every round
-        new_state = (
-            partials.groupby("dst_block")
-            .cogroup(
-                state.withColumn("__base", F.lit(base))
-                .withColumn("__extrap", F.lit(1 if do_extrap else 0))
-                .withColumn("__snap", F.lit(1 if do_snap else 0))
-                .groupby("block_id")
-            )
-            .applyInArrow(update_kernel, schema=_STATE_SCHEMA)
-            .observe(
-                obs,
-                F.sum("block_delta").alias("d"),
-                F.sum("block_nd").alias("nd"),
-            )
-            .transform(checkpoint_state)
-        )
-        agg = obs.get
-        delta = float(agg["d"] or 0.0)
-        non_dangling = float(agg["nd"] or 0.0)
-        state = new_state
-        result.deltas.append(delta)
-        wall = time.monotonic() - t0
-        result.iter_seconds.append(wall)
-        result.iterations = it + 1
-        if checkpointer is not None:
-            # the B-row block-state frame is the checkpoint: tiny writes,
-            # per-BLOCK lineage rows (partition granularity = the unit the
-            # kernel computes in), and resume needs no graph re-scan
-            checkpointer.save_iteration(state, it + 1, wall_s=wall, delta=delta)
-        if delta < tol:
-            result.converged = True
-            break
+        base = (1.0 - alpha) / n_t + alpha * (1.0 - nd) / n_t
+        return {"__base": base, "__extrap": int(do_extrap), "__snap": int(do_snap)}
 
-    def explode_kernel(batches):
-        for batch in batches:
-            for i in range(batch.num_rows):
-                lo = batch.column("lo")[i].as_py()
-                mask = np.frombuffer(
-                    batch.column("mask")[i].as_py(), dtype=np.float64
-                )
-                ranks = np.frombuffer(
-                    batch.column("ranks")[i].as_py(), dtype=np.float64
-                )
-                live = np.flatnonzero(mask > 0)
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "id": pa.array(live + lo, pa.int64()),
-                        "rank": pa.array(ranks[live], pa.float64()),
-                    }
-                )
-
-    # the slot-form stays persisted: it lives in csr._slotform_cache for the
-    # next run on this CsrGraph (dropped with the CsrGraph / session)
-    result.ranks = state.mapInArrow(explode_kernel, schema="id long, rank double")
-    return result
-
-
-_ARROW_STATE = pa.schema(
-    [
-        ("block_id", pa.int64()),
-        ("lo", pa.int64()),
-        ("hi", pa.int64()),
-        ("mask", pa.binary()),
-        ("has_out", pa.binary()),
-        ("ranks", pa.binary()),
-        ("prev", pa.binary()),
-        ("block_delta", pa.float64()),
-        ("block_nd", pa.float64()),
-    ]
-)
-
-
-def _update_kernel_factory(alpha: float):
-    """One fixed kernel object for the whole run; per-iteration scalars
-    (the teleport+dangling ``base``) arrive via the ``__base`` column."""
-
-    def update_kernel(parts_tbl: "pa.Table", state_tbl: "pa.Table") -> "pa.Table":
-        if state_tbl.num_rows == 0:
-            return pa.table(
-                {f.name: pa.array([], f.type) for f in _ARROW_STATE}
-            )
-        base = float(state_tbl.column("__base")[0].as_py())
-        lo = int(state_tbl.column("lo")[0].as_py())
-        hi = int(state_tbl.column("hi")[0].as_py())
-        width = hi - lo + 1
-        mask = np.frombuffer(
-            state_tbl.column("mask")[0].as_py(), dtype=np.float64
-        )
-        has_out = np.frombuffer(
-            state_tbl.column("has_out")[0].as_py(), dtype=np.float64
-        )
-        old = np.frombuffer(
-            state_tbl.column("ranks")[0].as_py(), dtype=np.float64
-        )
-        acc = np.zeros(width)
-        slots_col = parts_tbl.column("slots")
-        vals_col = parts_tbl.column("vals")
-        for i in range(parts_tbl.num_rows):
-            vals = np.frombuffer(vals_col[i].as_py(), dtype=np.float64)
-            if slots_col[i].is_valid:
-                slots = np.asarray(slots_col[i].values, dtype=np.int64)
-                np.add.at(acc, slots, vals)
-            else:
-                acc += vals
-        new = mask * (base + alpha * acc)
-        prev_col = state_tbl.column("prev")[0].as_py()
-        if int(state_tbl.column("__extrap")[0].as_py()):
-            # A_{alpha^s} power extrapolation (stride s = 6; Kamvar et al.
-            # 2003 generalized): the Google matrix's subdominant spectrum
-            # has modulus <= alpha, with the bulk EXACTLY at alpha times a
-            # low-order root of unity (2-cycles, layered 3-cycles), so
-            #   x* = (x_k - alpha^s x_{k-s}) / (1 - alpha^s)
-            # annihilates every mode with lambda^s = alpha^s while scaling
-            # any other mode by |lambda^s - alpha^s|/(1 - alpha^s) <=
-            # 2 alpha^s/(1-alpha^s)  (~1.2 at alpha=.85, s=6) — it can slow
-            # an iteration slightly but can never diverge. The fixed point
-            # is unchanged and mass is preserved. x_{k-s} comes from the
-            # snapshot taken s iterations earlier via the __snap flag.
-            prev = np.frombuffer(prev_col, dtype=np.float64)
-            a_s = alpha ** _STRIDE
-            new = mask * ((new - a_s * prev) / (1.0 - a_s))
-        prev_out = new.tobytes() if int(
-            state_tbl.column("__snap")[0].as_py()
-        ) else prev_col
-        delta = float(np.abs(new - old).sum())
-        nd = float((new * has_out).sum())
-        return pa.table(
-            {
-                "block_id": state_tbl.column("block_id"),
-                "lo": state_tbl.column("lo"),
-                "hi": state_tbl.column("hi"),
-                "mask": state_tbl.column("mask"),
-                "has_out": state_tbl.column("has_out"),
-                "ranks": pa.array([new.tobytes()], pa.binary()),
-                "prev": pa.array([prev_out], pa.binary()),
-                "block_delta": pa.array([delta], pa.float64()),
-                "block_nd": pa.array([nd], pa.float64()),
-            }
-        )
-
-    return update_kernel
+    spec = BlockSpec(
+        value="ranks",
+        vectors={"tele": "int8", "deg": "float64", "ranks": "float64",
+                 "prev": "float64"},
+        metrics={"block_delta": "double", "block_nd": "double"},
+        partials=("slots", "vals"),
+        gather=_gather,
+        fold=_fold_factory(alpha),
+        stop=lambda m: m["block_delta"] < tol,
+        scalars=scalars,
+    )
+    run = fixpoint(
+        spark, csr, spec, tagged, max_iter, checkpointer=checkpointer,
+        initial_state=initial_state, start_iteration=start_iteration,
+    )
+    tagged.unpersist()  # the init state it fed is checkpointed eagerly
+    return PageRankResult(
+        ranks=run.explode("rank"),
+        iterations=run.iterations,
+        deltas=run.metric("block_delta"),
+        iter_seconds=run.iter_seconds,
+        converged=run.converged,
+    )

@@ -129,14 +129,8 @@ class LinkGraph:
         return build_csr(self.edges, **kwargs)
 
     def pagerank(self, **kwargs):
-        """Block-vector CSR PageRank (the scale path); pass
-        ``strategy='rows'`` for the row-state differential kernel."""
-        strategy = kwargs.pop("strategy", "block")
+        """Block-vector CSR PageRank (the scale path)."""
         csr = kwargs.pop("csr", None) or self.to_csr()
-        if strategy == "rows":
-            from webgraph_spark.algo.pagerank import pagerank
-
-            return pagerank(self.edges.sparkSession, csr, self.nodes(), **kwargs)
         from webgraph_spark.algo.pagerank_block import pagerank_block
 
         return pagerank_block(self.edges.sparkSession, csr, self.nodes(), **kwargs)

@@ -12,8 +12,9 @@ like it "gradually gets slower" while every executor is idle.
 :func:`checkpoint_state` therefore rebuilds the DataFrame from the
 checkpointed internal RDD with fresh (default) statistics, making the
 per-round planning cost constant. The rebuild is plan-level only — no job
-runs, no data moves, and the fallback (if the internal API ever changes)
-is the plain checkpointed frame.
+runs, no data moves. It uses internal API on purpose and has no fallback:
+if that API changes, this fails loudly instead of quietly bringing the
+statistics blow-up back.
 """
 
 from __future__ import annotations
@@ -30,12 +31,9 @@ def checkpoint_state(df: DataFrame) -> DataFrame:
     before the rebuild, so ``Observation.get`` works unchanged.
     """
     ck = df.localCheckpoint(eager=True)
-    try:
-        spark = df.sparkSession
-        jdf = ck._jdf
-        fresh = spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False
-        )
-        return DataFrame(fresh, spark)
-    except Exception:  # pragma: no cover — internal-API fallback
-        return ck
+    spark = df.sparkSession
+    jdf = ck._jdf
+    fresh = spark._jsparkSession.internalCreateDataFrame(
+        jdf.queryExecution().toRdd(), jdf.schema(), False
+    )
+    return DataFrame(fresh, spark)
