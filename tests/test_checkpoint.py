@@ -261,18 +261,17 @@ pagerank_block(spark, csr, spark.range({n}).selectExpr("id"),
         except ProcessLookupError:
             pass
 
-    state_dir = os.path.join(root, "state")
+    def published():
+        return os.path.isdir(os.path.join(root, "state", "iter=000003"))
+
     deadline = time.time() + 180
     try:
-        while time.time() < deadline and proc.poll() is None:
-            if os.path.isdir(os.path.join(state_dir, "iter=000003")):
-                kill()
-                break
+        while time.time() < deadline and proc.poll() is None and not published():
             time.sleep(0.05)
-        else:
-            if proc.poll() is None:
-                kill()
-                raise AssertionError("victim never published iteration 3")
+        # checked again: the victim can publish, or finish, between two polls
+        if not published():
+            raise AssertionError("victim never published iteration 3")
+        kill()
         proc.wait(timeout=30)
     finally:
         if proc.poll() is None:

@@ -145,6 +145,9 @@ def test_url2_normalize_column(spark):
         "http://a.test:80/x": "http://a.test/x",
         "http://a.test:8080/x": "http://a.test:8080/x",
         "http://a.test:0080/x": "http://a.test/x",  # parseInt("0080") == 80
+        "http://a.test:00000000443/x": "http://a.test:443/x",  # 11 chars, 443
+        "http://a.test:0/x": "http://a.test:0/x",
+        "http://a.test:000/x": "http://a.test:0/x",
         "http://a.test:bad/x": "http://a.test/x",   # unparsable port dropped
         # parseInt accepts any int-range port (URL2.java:376); only a
         # genuine overflow (> 2^31-1) lands in the catch -> "no port"

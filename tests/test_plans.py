@@ -152,3 +152,68 @@ def test_checkpoint_state_statistics_do_not_grow(spark):
         # checked every round: a squaring estimate soon outgrows what the
         # JVM bridge can convert
         assert size(state) <= start
+
+
+def _run_engine_kernel(spark):
+    from webgraph_spark.algo.pagerank_block import pagerank_block
+    from webgraph_spark.plans.csr import build_csr
+
+    csr = build_csr(edge_df(spark, er_arcs(60, 0.1, 5)), num_blocks=3)
+    pagerank_block(spark, csr, spark.range(60).select("id"), tol=0.0, max_iter=2)
+
+
+def _on_workers(spark, probe):
+    n = spark.sparkContext.defaultParallelism
+    return spark.sparkContext.parallelize(range(n), n).mapPartitions(probe).collect()
+
+
+def test_worker_import_caches_pruned(spark):
+    # before each task pyspark calls importlib.invalidate_caches(), which
+    # re-reads the central directory of every cached zipimporter: one per
+    # archive subpackage dir, plus the Python-free spark-core jar Spark puts
+    # on the workers' PYTHONPATH. Importing webgraph_spark prunes both.
+    def probe(_):
+        import os
+        import sys
+        import zipfile
+        import zipimport
+
+        import webgraph_spark  # noqa: F401
+
+        archives = [p for p in sys.path if os.path.isfile(p) and zipfile.is_zipfile(p)]
+        with_python = []
+        for p in archives:
+            with zipfile.ZipFile(p) as zf:
+                if any(n.endswith((".py", ".pyc")) for n in zf.namelist()):
+                    with_python.append(p)
+        importers = [
+            k for k, v in sys.path_importer_cache.items() if isinstance(v, zipimport.zipimporter)
+        ]
+        yield sorted(importers), sorted(with_python), sorted(set(archives) - set(with_python))
+
+    _run_engine_kernel(spark)
+    for importers, with_python, without_python in _on_workers(spark, probe):
+        assert importers == with_python
+        assert without_python == []
+
+
+def test_pruned_worker_still_imports_lazily(spark):
+    # the pruned subpackage importers are rebuilt on demand: a pyspark
+    # submodule first imported after the prune loads from pyspark's archive
+    def probe(_):
+        import os
+        import sys
+
+        import webgraph_spark  # noqa: F401
+
+        fresh = "pyspark.ml.linalg" not in sys.modules
+        import pyspark
+        import pyspark.ml.linalg
+
+        yield fresh, pyspark.ml.linalg.__file__, os.path.dirname(pyspark.__file__) + os.sep
+
+    _run_engine_kernel(spark)
+    seen = _on_workers(spark, probe)
+    assert any(fresh for fresh, _, _ in seen)
+    for _, linalg, pyspark_dir in seen:
+        assert linalg.startswith(pyspark_dir)

@@ -17,6 +17,8 @@ No RDDs, no per-row Python UDFs on hot paths, no code copied from the
 reference (which is Java; this engine is a new design on Spark).
 """
 
+from webgraph_spark import _worker  # noqa: F401  (prunes a Spark worker's import caches)
+
 __version__ = "0.1.0"
 
 __all__ = ["LinkGraph", "get_spark", "__version__"]

@@ -27,6 +27,41 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
 }
 
+# cgroup v2, then v1: the container's memory limit, when it has one
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def host_memory_bytes() -> int:
+    """``MemTotal``, or the cgroup memory limit if that is lower."""
+    with open("/proc/meminfo") as f:
+        total = next(int(ln.split()[1]) * 1024 for ln in f if ln.startswith("MemTotal:"))
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            total = min(total, int(limit))
+    return total
+
+
+def driver_memory(mem_bytes: int) -> str:
+    """``spark.driver.memory`` for a host with ``mem_bytes`` of memory.
+
+    In local mode the driver JVM is the executor: it gets half the memory,
+    the rest is left to the Python workers, their Arrow batches and the page
+    cache. Never below Spark's own 1g default.
+    """
+    return f"{max(1024, mem_bytes // 2 // 2**20)}m"
+
+
+def _local_cpus() -> str:
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
 
 def get_spark(
     app_name: str = "webgraph-spark",
@@ -36,24 +71,23 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` outside a cluster.
-    ``shuffle_partitions`` defaults to the local core count so one wave of
-    reduce tasks covers the machine (on a cluster: set via spark-submit).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` outside a cluster, or
+    to the cores this process may run on. ``shuffle_partitions`` defaults to
+    the same core count so one wave of reduce tasks covers the machine (on a
+    cluster: set via spark-submit). ``spark.driver.memory`` defaults to
+    :func:`driver_memory` of :func:`host_memory_bytes`.
     """
     builder = SparkSession.builder.appName(app_name)
+    cpus = _local_cpus()
     if master is None and "SPARK_MASTER" not in os.environ:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     if master is not None:
         builder = builder.master(master)
     if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
     conf = dict(ENGINE_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    # local mode: the driver JVM IS the executor; size the heap for
-    # 32 task threads × Arrow batches (the box has 128 GiB)
-    conf.setdefault("spark.driver.memory", "16g")
+    conf["spark.driver.memory"] = driver_memory(host_memory_bytes())
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -142,9 +142,12 @@ def normalize_url2(col):
         has_port, F.regexp_extract(hostport, r"^([^:]*)", 1)
     ).otherwise(hostport)
     portstr = F.when(has_port, F.regexp_replace(hostport, r"^[^:]*:", ""))
-    # ≤ 10 digits AND ≤ Integer.MAX_VALUE: Java's parseInt accepts any
-    # int-range port (URL2 keeps e.g. :1234567890 in toString()); only a
-    # genuine parseInt overflow (> 2147483647) reads as "no port"
+    # leading zeros stripped first (parseInt reads :00000000443 as 443 and
+    # :0 as 0), then ≤ 10 digits AND ≤ Integer.MAX_VALUE: Java's parseInt
+    # accepts any int-range port (URL2 keeps e.g. :1234567890 in
+    # toString()); only a genuine parseInt overflow (> 2147483647) reads as
+    # "no port"
+    portstr = F.regexp_replace(portstr, r"^0+(?=[0-9])", "")
     port = F.when(
         portstr.rlike(r"^[0-9]{1,10}$")
         & (portstr.cast("long") <= F.lit(2147483647)),
