@@ -857,51 +857,19 @@ def _q_labelprop(spark, sf_dir):
     )
 
 
-def _run_block_kernel(spark, sf_dir, kernel_fn):
-    """Symmetrized CSR -> block kernel -> released caches.
-
-    The symmetrized set is persisted across build_csr's three scans (count,
-    quantile cuts, encode); the kernel's output depends only on its eagerly
-    checkpointed state, so the sym cache AND the pair slot-form are dropped
-    before returning — repeated driver-query runs in one session must not
-    accumulate cached blocks."""
-    from webgraph_spark.plans.partitioning import symmetrize_for_join
-    from webgraph_spark.plans.blockvec import unpersist_pair_slotform
-
-    e = _edges(spark, sf_dir)
-    sym = symmetrize_for_join(e, "src").persist()
-    try:
-        sym.count()
-        csr = build_csr(sym, num_blocks=8)
-        return kernel_fn(csr, _nodes(e))
-    finally:
-        unpersist_pair_slotform(csr)
-        sym.unpersist()
-
-
 def _q_block_kernels(spark, sf_dir):
     """Both block-vector fixpoint kernels — the 100-TB scale path — in one
     frame tagged by ``kernel`` (formerly the standalone ``labelprop_block``
     and ``cc_block`` queries): LPA (per-block dense label vectors, lexsort
-    vote combining) and hash-min CC. Same semantics and oracles as the row
-    kernels' ``labelprop`` / ``cc_components``."""
-    from webgraph_spark.algo.components_block import hash_min_components_block
-    from webgraph_spark.algo.labelprop_block import label_propagation_block
-
-    lpa = _run_block_kernel(
-        spark,
-        sf_dir,
-        lambda csr, nodes: label_propagation_block(
-            spark, csr, nodes, max_iter=LPA_ITERS
-        ).labels.select("id", "label"),
-    ).select(F.lit("lpa").alias("kernel"), "id", F.col("label").alias("value"))
-    cc = _run_block_kernel(
-        spark,
-        sf_dir,
-        lambda csr, nodes: hash_min_components_block(
-            spark, csr, nodes
-        ).components.select("id", "comp"),
-    ).select(F.lit("cc").alias("kernel"), "id", F.col("comp").alias("value"))
+    vote combining) and hash-min CC, through the same edge-level entry
+    points and oracles as ``labelprop`` / ``cc_components``."""
+    e = _edges(spark, sf_dir)
+    lpa = label_propagation(e, _nodes(e), max_iter=LPA_ITERS).labels.select(
+        F.lit("lpa").alias("kernel"), "id", F.col("label").alias("value")
+    )
+    cc = hash_min_components(e, _nodes(e)).components.select(
+        F.lit("cc").alias("kernel"), "id", F.col("comp").alias("value")
+    )
     return lpa.unionByName(cc)
 
 
@@ -1495,13 +1463,14 @@ def _plant_neardup_embeddings(emb):
 def _q_embed_neardup(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs + transitive cluster ids — the
     vector-space twin of ``minhash_neardup`` (hyperplane-LSH candidates,
-    exact cosine verify at threshold 0.9, hash-min CC over the pair graph).
+    exact cosine verify at threshold 0.9, star-contraction CC over the pair
+    graph).
 
     Runs over the PORTABLE (md5-derived, integer-exact) buckets so the
     DuckDB oracle replays the whole pipeline: planted-copy derivation,
     quantized sign projections, bucket-collision candidate join, exact
     cosine verify, transitive closure."""
-    from webgraph_spark.algo.components import hash_min_components
+    from webgraph_spark.algo.components import star_contraction_components
 
     from webgraph_spark.plans.iterate import checkpoint_state
 
@@ -1514,7 +1483,7 @@ def _q_embed_neardup(spark, sf_dir):
         edges = pairs.select(
             F.col("id_a").alias("src"), F.col("id_b").alias("dst")
         )
-        comps = hash_min_components(
+        comps = star_contraction_components(
             edges, aug.select(F.col("vec_id").alias("id"))
         ).components
         out = (
@@ -1559,13 +1528,14 @@ def _q_ngram_jaccard(spark, sf_dir):
 
 def _q_minhash_neardup(spark, sf_dir):
     """MinHash-LSH verified pairs + transitive near-dup cluster ids in one
-    frame (pair finder composed with the hash-min CC kernel).
+    frame (pair finder composed with star-contraction CC, which takes the
+    arbitrary doc ids as they are).
 
     Runs over the PORTABLE (md5-based, mod 2^31-1) hash so the DuckDB oracle
     replays the ENTIRE pipeline — shingling, signatures, banding, candidate
     join, exact-Jaccard verify, transitive closure; the throughput default
     (xxhash64 mod 2^64) shares every line but the hash primitive."""
-    from webgraph_spark.algo.components import hash_min_components
+    from webgraph_spark.algo.components import star_contraction_components
     from webgraph_spark.plans.iterate import checkpoint_state
 
     docs = _docs(spark, sf_dir)
@@ -1578,7 +1548,7 @@ def _q_minhash_neardup(spark, sf_dir):
         edges = pairs.select(
             F.col("id_a").alias("src"), F.col("id_b").alias("dst")
         )
-        comps = hash_min_components(
+        comps = star_contraction_components(
             edges, docs.select(F.col("doc_id").alias("id"))
         ).components
         out = (
@@ -1967,9 +1937,9 @@ SELECT metric, value FROM (
             recursive=True,
         ),
         "labelprop": _lpa_sql(LPA_ITERS),
-        # both block kernels replay the row kernels' oracles, tagged and
-        # nested as subqueries (DuckDB allows WITH [RECURSIVE] in a derived
-        # table, so the two CTE namespaces cannot clash)
+        # the block kernels replay the labelprop and cc_components oracles,
+        # tagged and nested as subqueries (DuckDB allows WITH [RECURSIVE] in
+        # a derived table, so the two CTE namespaces cannot clash)
         "block_kernels": (
             "SELECT 'lpa' AS kernel, id, label AS value FROM ("
             + _lpa_sql(LPA_ITERS)

@@ -2,7 +2,8 @@
 
 Runs the engine's flagship jobs on the driver testdata at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) under
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
+``local[--cpus]`` (default ``$SPARK_GRAFT_CPUS``, else the cores this process
+may run on) and prints ONE JSON line::
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": <sf>, ...extras}
@@ -44,7 +45,7 @@ from webgraph_spark.functions.dedup import dedup_exact, minhash_lsh_pairs, simha
 from webgraph_spark.functions.similarity import cosine_topk
 from webgraph_spark.plans.blockvec import unpersist_pair_slotform
 from webgraph_spark.plans.csr import build_csr, verify_accounting
-from webgraph_spark.session import get_spark
+from webgraph_spark.session import get_spark, local_cpus
 
 PART_BASE = 1_000
 CUST_BASE = 21_000
@@ -80,7 +81,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", default=local_cpus())
     ap.add_argument("--multiplier", type=int, default=1)
     ap.add_argument("--pr-iters", type=int, default=5)
     ap.add_argument("--graph-only", action="store_true",

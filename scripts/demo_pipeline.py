@@ -28,7 +28,7 @@ from webgraph_spark.algo.pagerank_block import pagerank_block
 from webgraph_spark.algo.triangles import triangle_count_adjacency
 from webgraph_spark.checkpoint import CheckpointManager
 from webgraph_spark.plans.csr import build_csr, compression_stats
-from webgraph_spark.session import get_spark
+from webgraph_spark.session import get_spark, local_cpus
 from webgraph_spark.sources.corpus import (
     corpus_edges,
     corpus_nodes,
@@ -43,7 +43,7 @@ def main() -> None:
     ap.add_argument("--files", type=int, default=5000)
     ap.add_argument("--repos", type=int, default=50)
     ap.add_argument("--out", default="/tmp/webgraph_demo")
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "16"))
+    ap.add_argument("--cpus", default=local_cpus())
     ap.add_argument(
         "--pr-iters",
         type=int,

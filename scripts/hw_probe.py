@@ -25,8 +25,7 @@ import numpy as np
 
 
 def _confine(cores: int) -> None:
-    # pool initializer: confine this worker to hardware threads 0..cores-1
-    # (the same taskset mask scaling.py --pin applies to the Spark JVMs),
+    # pool initializer: confine this worker to hardware threads 0..cores-1,
     # so "p processes" means "p hardware threads", not "p runnable
     # processes the scheduler may spread over idle cores between timeslices"
     os.sched_setaffinity(0, set(range(cores)))

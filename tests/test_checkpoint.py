@@ -10,9 +10,11 @@ import numpy as np
 
 from tests.oracles import er_arcs
 from webgraph_spark.algo.components import hash_min_components
+from webgraph_spark.algo.components_block import hash_min_components_block
 from webgraph_spark.algo.pagerank_block import pagerank_block
 from webgraph_spark.checkpoint import CheckpointManager, partition_lineage
 from webgraph_spark.plans.csr import build_csr
+from webgraph_spark.plans.partitioning import symmetrize_for_join
 
 
 def _vec(df, n):
@@ -35,11 +37,13 @@ def test_cc_resume_exact(spark, tmp_path):
     arcs = [(i, i + 1) for i in range(40)]
     edges = spark.createDataFrame(arcs, "src long, dst long")
     full = hash_min_components(edges, max_iter=50)
+    csr = build_csr(symmetrize_for_join(edges, "src"))
+    nodes = spark.range(41)
     ck = CheckpointManager(spark, str(tmp_path / "cc"), run_id="c1")
-    hash_min_components(edges, max_iter=3, checkpointer=ck)
+    hash_min_components_block(spark, csr, nodes, max_iter=3, checkpointer=ck)
     state = ck.load_iteration(ck.latest_iteration())
-    resumed = hash_min_components(
-        edges, max_iter=50, initial=state, start_iteration=3
+    resumed = hash_min_components_block(
+        spark, csr, nodes, max_iter=50, initial_state=state, start_iteration=3
     )
     a = {r["id"]: r["comp"] for r in full.components.collect()}
     b = {r["id"]: r["comp"] for r in resumed.components.collect()}
@@ -106,9 +110,7 @@ def test_pagerank_block_resume_allclose(spark, tmp_path):
 
 
 def test_block_cc_and_lpa_resume_exact(spark, tmp_path):
-    from webgraph_spark.algo.components_block import hash_min_components_block
     from webgraph_spark.algo.labelprop_block import label_propagation_block
-    from webgraph_spark.plans.partitioning import symmetrize_for_join
 
     arcs = [(i, i + 1) for i in range(40)]
     edges = spark.createDataFrame(arcs, "src long, dst long")

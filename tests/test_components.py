@@ -11,6 +11,10 @@ from webgraph_spark.algo.components import (
     largest_component,
     renumber_by_size,
 )
+from webgraph_spark.algo.components_block import hash_min_components_block
+from webgraph_spark.algo.labelprop import label_propagation
+from webgraph_spark.plans.csr import build_csr
+from webgraph_spark.plans.partitioning import symmetrize_for_join
 
 
 def _comp_map(df, col="comp"):
@@ -43,8 +47,9 @@ def test_long_chain_converges(spark):
     assert set(got.values()) == {0}
     assert res.iterations < n - 1  # strictly better than pure hash-min
 
-    # pure hash-min (fallback disabled) still converges, the slow way
-    res2 = hash_min_components(edges, max_iter=100, star_fallback_after=None)
+    # pure hash-min (no star finish) still converges, the slow way
+    csr = build_csr(symmetrize_for_join(edges, "src"))
+    res2 = hash_min_components_block(spark, csr, spark.range(n), max_iter=100)
     assert _comp_map(res2.components) == got
     assert res2.changed_per_iter[-1] == 0
 
@@ -65,6 +70,27 @@ def test_directed_arcs_treated_undirected(spark):
     edges = spark.createDataFrame([(0, 1), (2, 1)], "src long, dst long")
     res = hash_min_components(edges)
     assert set(_comp_map(res.components).values()) == {0}
+
+
+@pytest.mark.parametrize(
+    "entry", [hash_min_components, label_propagation], ids=["cc", "lpa"]
+)
+def test_entry_points_leave_nothing_cached(spark, entry):
+    # driver queries call the entry points again and again in one session:
+    # the symmetrized edges, the node frame and the pair slot-form each call
+    # persists must be released before it returns
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def cached():
+        entries = cache.cachedData()
+        return sorted(entries.apply(i).toString() for i in range(entries.size()))
+
+    edges = spark.createDataFrame([(0, 1), (1, 2), (5, 6)], "src long, dst long")
+    before = cached()
+    res = entry(edges, max_iter=5)
+    assert cached() == before
+    out = res.components if entry is hash_min_components else res.labels
+    assert out.count() == 5  # the result outlives the release
 
 
 def test_renumber_by_size_shattered(spark):

@@ -1,12 +1,11 @@
-"""Block-vector hash-min CC: differential vs the row kernel."""
+"""Block-vector hash-min CC: closed-form fixtures + union-find oracle."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from tests.oracles import er_arcs
-from webgraph_spark.algo.components import hash_min_components
+from tests.oracles import cc_union_find, er_arcs
 from webgraph_spark.algo.components_block import hash_min_components_block
 from webgraph_spark.plans.csr import build_csr
 from webgraph_spark.plans.partitioning import symmetrize_for_join
@@ -38,8 +37,7 @@ def test_er_differential_vs_row_kernel(spark, seed, blocks):
     edges = spark.createDataFrame(arcs, "src long, dst long")
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
     got = _comps(_block_cc(spark, edges, nodes, num_blocks=blocks).components)
-    expect = _comps(hash_min_components(edges, nodes).components)
-    assert got == expect
+    assert got == cc_union_find(arcs, list(range(n)))
 
 
 def test_path_graph_converges(spark):

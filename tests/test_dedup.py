@@ -115,3 +115,23 @@ def test_near_dup_clusters_transitive_closure(spark):
     assert clusters[5] != 1 and clusters[6] != 1
     kept = sorted(r["doc_id"] for r in dedup_near(docs, threshold=0.5, bands=32).collect())
     assert kept[0] == 1 and 2 not in kept and 3 not in kept and 4 not in kept
+
+
+def test_near_dup_clusters_sparse_ids(spark):
+    # the clusterer takes document ids as they come: ids far apart (no dense
+    # renumbering) give the same clusters, shifted
+    from webgraph_spark.functions.dedup import near_dup_clusters
+
+    shift = 2**40
+    dense = {
+        r["doc_id"]: r["cluster"]
+        for r in near_dup_clusters(_docs(spark), threshold=0.5, bands=32).collect()
+    }
+    sparse_docs = spark.createDataFrame(
+        [(i + shift, t) for i, t in DOCS], "doc_id long, text string"
+    )
+    sparse = {
+        r["doc_id"]: r["cluster"]
+        for r in near_dup_clusters(sparse_docs, threshold=0.5, bands=32).collect()
+    }
+    assert sparse == {i + shift: c + shift for i, c in dense.items()}

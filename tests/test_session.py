@@ -36,6 +36,6 @@ def test_host_memory_takes_the_lower_cgroup_limit(tmp_path, monkeypatch):
 
 def test_local_cpus_fall_back_to_the_affinity_mask(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
-    assert session._local_cpus() == str(len(os.sched_getaffinity(0)))
+    assert session.local_cpus() == str(len(os.sched_getaffinity(0)))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
-    assert session._local_cpus() == "3"
+    assert session.local_cpus() == "3"

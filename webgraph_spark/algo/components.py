@@ -7,12 +7,14 @@ hash-min fixpoint (comp <- min(comp, min over neighbours' comp)), which
 yields the same partition of the vertex set; after canonical renumbering
 (size desc, then min-member asc) the outputs match the reference exactly.
 
-Two formulations of the same synchronous fixpoint: :func:`hash_min_components`
-(row state, with a star-contraction finish for long chains; it backs the
-driver oracle queries) and the throughput path
-:func:`webgraph_spark.algo.components_block.hash_min_components_block`, which
-runs on the block-vector fixpoint engine shared with PageRank and LPA
-(:mod:`webgraph_spark.plans.blockvec`).
+One hash-min kernel:
+:func:`webgraph_spark.algo.components_block.hash_min_components_block`, on
+the block-vector fixpoint engine shared with PageRank and LPA
+(:mod:`webgraph_spark.plans.blockvec`). :func:`hash_min_components` is its
+edge-level entry point and adds the one thing the kernel lacks, a
+star-contraction finish for long chains. :func:`star_contraction_components`
+is id-agnostic (no dense block state), which is what the near-duplicate
+clusterers need for arbitrary document ids.
 """
 
 from __future__ import annotations
@@ -20,10 +22,14 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from webgraph_spark.plans.iterate import checkpoint_state
+
+# unconverged hash-min rounds before the star-contraction finish: more means
+# a long-chain region (diameter >> typical web-graph depth)
+STAR_FINISH_AFTER = 24
 
 
 @dataclass
@@ -38,124 +44,46 @@ def hash_min_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
     max_iter: int = 100,
-    checkpointer=None,
-    initial: DataFrame | None = None,
-    start_iteration: int = 0,
-    star_fallback_after: int | None = 24,
 ) -> ComponentsResult:
     """Hash-min fixpoint over the symmetrized edge set.
 
-    Convergence in O(diameter) rounds; the changed-count aggregate doubles as
-    the per-round action (no extra count job). Isolated nodes (present in
-    ``nodes`` but no arcs) keep their own id as component.
+    Convergence in O(diameter) rounds. Isolated nodes (present in ``nodes``
+    but no arcs) keep their own id as component; ``nodes`` defaults to every
+    edge endpoint and must cover them all. Caches nothing past the call.
 
-    ``star_fallback_after``: if still unconverged after that many rounds the
-    graph has a long-chain region (diameter ≫ typical web-graph depth) —
-    switch to :func:`star_contraction_components` (O(log n) rounds), seeding
-    it with the labels already computed so earlier rounds aren't wasted.
-    ``None`` disables the fallback.
+    If still unconverged after :data:`STAR_FINISH_AFTER` rounds (and
+    ``max_iter`` allows that many), finishes with
+    :func:`star_contraction_components` (O(log n) rounds), seeded with the
+    labels already computed so earlier rounds aren't wasted; its rounds count
+    in ``iterations`` with a changed count of -1.
     """
-    from webgraph_spark.plans.partitioning import symmetrize_for_join
+    from webgraph_spark.algo.components_block import hash_min_components_block
+    from webgraph_spark.plans.blockvec import symmetric_csr
 
-    sym = symmetrize_for_join(edges, "src").persist()
-    sym.count()
-    if nodes is None:
-        nodes = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id")))
-            .distinct()
+    with symmetric_csr(edges, nodes) as (sym, csr, nodes):
+        result = hash_min_components_block(
+            edges.sparkSession, csr, nodes,
+            max_iter=min(max_iter, STAR_FINISH_AFTER),
         )
-    nodes = nodes.select("id").persist()
-    comps = (
-        initial.select("id", "comp")
-        if initial is not None
-        else nodes.withColumn("comp", F.col("id"))
-    ).withColumn("__ch", F.lit(1)).transform(checkpoint_state)
-
-    result = ComponentsResult(components=comps, iterations=start_iteration)
-    for it in range(start_iteration, max_iter):
-        t0 = time.monotonic()
-        # Systolic gather: component labels only ever DECREASE, so a
-        # neighbour whose label did not change last round contributes the
-        # same min it already contributed — only changed nodes need to send
-        # (HyperBall's systolic argument, ``HyperBall.java:120-135``). Then
-        # least() applies the hash-min update and the changed flag rides on
-        # the checkpointed rows, so the convergence count is a cheap scan,
-        # not a separate new⋈old join job.
-        # SHUFFLE_HASH on the state side: the checkpointed comps frame has
-        # unknown stats (ExistingRDD), so without the hint AQE broadcast-
-        # builds the persisted EDGE side — re-broadcasting the graph every
-        # round. With it the O(changed) sender set shuffles and the cached
-        # pre-partitioned sym streams with no exchange.
-        # Self-row fusion: instead of aggregating neighbour mins by dst and
-        # LEFT-JOINING the result back onto the state (a second O(n)
-        # exchange of comps by id plus a join build per round), the state
-        # rows ride INTO the same aggregation as tagged "self" rows
-        # (__s=1). One hash aggregate then yields, per node, both the
-        # neighbour min (min over __s=0 rows) and the carried old label
-        # (min over __s=1 rows — exactly one such row per node), so the
-        # update + changed flag are a pure projection. Per round:
-        # 2 exchanges (senders by src, partial-agg rows by id) and 1 join,
-        # versus 3 exchanges and 2 joins for the join-back formulation.
-        gather = sym.join(
-            comps.filter(F.col("__ch") == 1).hint("shuffle_hash"),
-            sym["src"] == comps["id"],
-        ).select(
-            F.col("dst").alias("id"),
-            F.col("comp").alias("__v"),
-            F.lit(0).alias("__s"),
-        )
-        self_rows = comps.select(
-            "id", F.col("comp").alias("__v"), F.lit(1).alias("__s")
-        )
-        obs = Observation()
-        updated = (
-            gather.unionByName(self_rows)
-            .groupBy("id")
-            .agg(
-                F.min(F.when(F.col("__s") == 0, F.col("__v"))).alias("__nm"),
-                F.min(F.when(F.col("__s") == 1, F.col("__v"))).alias("__old"),
-            )
-            .select(
-                "id",
-                F.least("__old", "__nm").alias("comp"),
-                (F.col("__nm") < F.col("__old")).cast("int").alias("__ch"),
-            )
-            .observe(obs, F.sum("__ch").alias("c"))
-            .transform(checkpoint_state)
-        )
-        changed = int(obs.get["c"] or 0)
-        new_comps = updated
-        wall = time.monotonic() - t0
-        result.changed_per_iter.append(changed)
-        result.iter_seconds.append(wall)
-        result.iterations = it + 1
-        if checkpointer is not None:
-            checkpointer.save_iteration(
-                new_comps, it + 1, wall_s=wall, delta=float(changed)
-            )
-        comps = new_comps
-        if changed == 0:
-            break
         if (
-            star_fallback_after is not None
-            and it - start_iteration + 1 >= star_fallback_after
+            result.iterations < STAR_FINISH_AFTER
+            or result.changed_per_iter[-1] == 0  # converged
         ):
-            # long-chain graph: finish with O(log n) star contraction,
-            # seeded by the partial labels (same-component by construction)
-            seed_edges = sym.select("src", "dst").union(
-                comps.filter(F.col("id") != F.col("comp")).select(
-                    F.col("id").alias("src"), F.col("comp").alias("dst")
-                )
-            )
-            star = star_contraction_components(seed_edges, nodes)
-            result.iterations += star.iterations
-            result.iter_seconds.extend(star.iter_seconds)
-            result.changed_per_iter.extend([-1] * star.iterations)
-            result.components = star.components
             return result
-    result.components = comps.select("id", "comp")
-    return result
+        # long-chain graph: the partial labels are same-component by
+        # construction, so they seed the contraction as extra edges
+        comps = result.components
+        seed_edges = sym.select("src", "dst").union(
+            comps.filter(F.col("id") != F.col("comp")).select(
+                F.col("id").alias("src"), F.col("comp").alias("dst")
+            )
+        )
+        star = star_contraction_components(seed_edges, nodes)
+        result.iterations += star.iterations
+        result.iter_seconds.extend(star.iter_seconds)
+        result.changed_per_iter.extend([-1] * star.iterations)
+        result.components = star.components
+        return result
 
 
 def star_contraction_components(

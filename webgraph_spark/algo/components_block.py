@@ -1,11 +1,8 @@
 """Block-vector connected components: hash-min as a min-SpMV over CSR.
 
-The row-state kernel (:func:`webgraph_spark.algo.components
-.hash_min_components`, semantics after ``ConnectedComponents.java:69-173``)
-is systolic — only changed labels are re-sent — but still pays two O(state)
-exchanges and a JVM hash aggregate per round. This variant runs the SAME
-synchronous hash-min fixpoint (component label = min over own label and all
-neighbours' labels, per round, over the symmetrized graph) on the shared
+The one hash-min kernel (semantics after ``ConnectedComponents.java:69-173``):
+the synchronous fixpoint component label = min over own label and all
+neighbours' labels, per round, over the symmetrized graph, on the shared
 block-vector engine (:mod:`webgraph_spark.plans.blockvec`):
 
 - gather: source labels by slot, PRE-COMBINED per destination slot with one
@@ -14,12 +11,12 @@ block-vector engine (:mod:`webgraph_spark.plans.blockvec`):
 - fold: ``new = minimum(old, incoming)``, counting changed live slots; the
   run stops when no label changes.
 
-Exact integer minima — bit-identical to the row kernel at every round
-(differential-tested); the fixpoint is the min node id per component either
-way. Rounds are O(diameter) like any hash-min; the row kernel's large-star/
-small-star fallback remains the answer for pathological diameters, while
-this kernel is the throughput path for the web-like (low-diameter) regime
-the north rule targets.
+Exact integer minima; the fixpoint is the min node id per component
+(differential-tested against union-find). Rounds are O(diameter) like any
+hash-min. The edge-level entry point
+:func:`webgraph_spark.algo.components.hash_min_components` symmetrizes, builds
+the CSR, runs this kernel and owns the large-star/small-star finish for
+pathological diameters; this kernel owns checkpoint/resume.
 """
 
 from __future__ import annotations

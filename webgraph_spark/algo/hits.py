@@ -79,9 +79,9 @@ def hits(
         a_obs = Observation()
         # SHUFFLE_HASH on the state side: the checkpointed score frame has
         # unknown stats (ExistingRDD) — without the hint AQE can broadcast-
-        # build the persisted EDGE side each half-step (the labelprop.py
-        # trap); with it the O(n) scores shuffle and the cached
-        # pre-partitioned arcs stream with no exchange.
+        # build the persisted EDGE side each half-step; with it the O(n)
+        # scores shuffle and the cached pre-partitioned arcs stream with no
+        # exchange.
         auth_raw = (
             by_src.join(
                 state.select(F.col("id").alias("src"), "hub").hint(

@@ -295,8 +295,8 @@ def hyperball(
         # send messages — the tail iterations touch a shrinking frontier.
         # SHUFFLE_HASH on the state side: the checkpointed register state
         # has unknown stats (ExistingRDD) — without the hint AQE can
-        # broadcast-build the cached edge side each iteration (the
-        # labelprop.py trap), defeating the partition_for_join layout.
+        # broadcast-build the cached edge side each iteration, defeating
+        # the partition_for_join layout.
         msgs = edges.join(
             state.filter(F.col("changed") == 1).select(
                 F.col("id").alias("dst"), "regs"

@@ -62,7 +62,7 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 1000) -> KCoreResult:
         # on filtered-out ids and vanish). SHUFFLE_HASH with the O(dropped)
         # frontier as build side: the cached src-partitioned edge set
         # streams with no exchange, and AQE can't broadcast the edge side
-        # against the unknown-stats checkpointed state (labelprop.py trap).
+        # against the unknown-stats checkpointed state.
         dropped_ids = cur.filter(F.col("deg") < k).select(
             F.col("id").alias("src")
         )

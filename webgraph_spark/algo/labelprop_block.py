@@ -1,11 +1,6 @@
 """Block-vector label propagation: label state as per-block dense vectors.
 
-The row-state kernel (:func:`webgraph_spark.algo.labelprop.label_propagation`)
-pays three exchanges per round — the O(n) label table to the edge layout, the
-O(m) gathered (dst, label) rows into the vote aggregate, and the vote
-partials to the final per-node aggregate — and the (dst, label) hash
-aggregate is the dominant cost (it hashes one JVM row per edge per round).
-This variant runs on the shared block-vector engine
+The one LPA kernel. It runs on the shared block-vector engine
 (:mod:`webgraph_spark.plans.blockvec`) over a CSR of the SYMMETRIZED graph:
 
 - gather: source labels by slot, and the (dst_slot, label) votes of each
@@ -15,20 +10,18 @@ This variant runs on the shared block-vector engine
   which start ≤ m and collapse as labels coalesce (the whole point of LPA).
 - fold: merge the partial counts (one lexsort over the concatenated
   triples), pick each slot's winner (max count, ties to the LOWEST label —
-  the same deterministic rule as the row kernel and the SQL oracle), keep
-  the old label where no vote arrived, and count changed live slots.
+  the same deterministic rule as the SQL oracle and ``tests.oracles
+  .lpa_sync``), keep the old label where no vote arrived, and count changed
+  live slots.
 
-Semantics are bit-identical to the row kernel (differential-tested): votes
-are integer counts, so there is no float-order hazard at all.
+Votes are integer counts, so there is no float-order hazard at all. The
+edge-level entry point :func:`webgraph_spark.algo.labelprop
+.label_propagation` symmetrizes, builds the CSR and runs this kernel; this
+kernel owns checkpoint/resume.
 
-THIS KERNEL IS THE DESIGNATED LPA SCALE PATH (round 4): under the pinned
-two-level protocol it measures scaling efficiency 1.01 at 113.7M edges
-(``BENCH_SCALING.json`` ``fixpoint_suite.lpa_block``, 2 interleaved reps)
-— the only LPA formulation measured ≥ 0.8 — while the row kernel measures
-0.695 at the same size (on the PageRank work-per-iteration trend curve,
-docs/SCALING.md §7b, but not measured over the gate at any size). Capacity
-claims for LPA at cluster scale cite this kernel; the row kernel remains
-the small-graph/ad-hoc path and the differential-test twin.
+Under the pinned two-level protocol of earlier rounds it measured scaling
+efficiency 1.01 at 113.7M edges (``BENCH_SCALING.json``
+``fixpoint_suite.lpa_block``, 2 interleaved reps; docs/SCALING.md §7b).
 """
 
 from __future__ import annotations
@@ -109,13 +102,13 @@ def label_propagation_block(
     present, duplicates removed) — the caller owns that contract; see
     :func:`webgraph_spark.plans.partitioning.symmetrize_for_join`. ``nodes``
     must cover every edge endpoint (``ValueError`` otherwise). Stops at
-    fixpoint or after ``max_iter`` rounds, like the row kernel.
+    fixpoint or after ``max_iter`` rounds.
     """
     values = nodes.select("id")
     if initial is not None:
-        # nodes missing from a partial `initial` keep their id as the label
-        # (the row kernel's rule); without the coalesce the NULL would cast
-        # to INT64_MIN in the kernel and win every min tie-break
+        # nodes missing from a partial `initial` keep their id as the label;
+        # without the coalesce the NULL would cast to INT64_MIN in the
+        # kernel and win every min tie-break
         values = values.join(initial.select("id", "label"), "id", "left")
         values = values.select("id", F.coalesce("label", "id").alias("labels"))
     else:

@@ -84,9 +84,9 @@ def pagerank_edges(
         # SHUFFLE_HASH on the rank side: the checkpointed rank state has
         # unknown stats while the persisted edeg side is small enough at
         # bench scale that AQE otherwise broadcast-builds the whole O(m)
-        # edge table every iteration (verified via executedPlan) — the same
-        # trap labelprop/CC hit. The hint keeps edeg's cached hash layout
-        # (zero edge exchange); only the O(n) rank table shuffles.
+        # edge table every iteration (verified via executedPlan). The hint
+        # keeps edeg's cached hash layout (zero edge exchange); only the
+        # O(n) rank table shuffles.
         # Self-row fusion: the contrib-vs-ranks back-join (an O(n) exchange
         # of ranks by id plus a join build per iteration) is folded into the
         # contribution aggregation — each node's state row rides in as a

@@ -9,8 +9,8 @@ here are canonical (min member id), so results are exactly reproducible.
 One outer round:
 
 1. **Forward coloring**: ``col(x) = min id that reaches x`` via hash-min
-   propagated along arc direction to fixpoint (same skeleton as
-   :func:`webgraph_spark.algo.components.hash_min_components`).
+   propagated along arc direction to fixpoint (systolic: only colors that
+   changed last round are re-sent).
 2. **Roots**: nodes with ``col(x) == x``. Root r's SCC is exactly
    ``{x : col(x) = r, x reaches r}``, and r is its minimum member.
 3. **Backward containment**: BFS from the roots along REVERSED arcs,
@@ -57,7 +57,7 @@ def _forward_min_coloring(edges: DataFrame, nodes: DataFrame, max_iter: int) -> 
         # builds the persisted edge side every round; with it the
         # O(changed) sender set shuffles and the pre-partitioned edges
         # stream with no exchange.
-        # Self-row fusion (same as hash_min_components): state rows ride
+        # Self-row fusion: state rows ride
         # into the gather aggregation as tagged self rows instead of being
         # joined back afterwards — one hash aggregate yields the neighbour
         # min AND the carried old color, saving an O(n) exchange of the

@@ -428,10 +428,11 @@ def near_dup_clusters(
     connected components of the near-dup graph so each cluster keeps exactly
     one survivor. Returns ``(doc_id, cluster, keeper)`` for every document
     (singletons are their own cluster); ``keeper`` = min doc id in cluster.
-    Composes the LSH pair finder with the hash-min CC fixpoint — the same
-    component kernel the link graph uses.
+    Composes the LSH pair finder with large-star/small-star contraction,
+    which works on arbitrary document ids (the block-vector CC kernel needs
+    dense ones).
     """
-    from webgraph_spark.algo.components import hash_min_components
+    from webgraph_spark.algo.components import star_contraction_components
 
     pairs = minhash_lsh_pairs(
         df, id_col, text_col, n, num_hashes, bands, threshold, seed, hash_fn
@@ -440,7 +441,7 @@ def near_dup_clusters(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
     nodes = df.select(F.col(id_col).alias("id"))
-    comps = hash_min_components(edges, nodes).components
+    comps = star_contraction_components(edges, nodes).components
     return comps.select(
         F.col("id").alias(id_col),
         F.col("comp").alias("cluster"),

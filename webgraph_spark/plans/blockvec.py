@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -44,8 +45,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from webgraph_spark.plans.csr import CsrGraph, decode_block
+from webgraph_spark.plans.csr import CsrGraph, build_csr, decode_block
 from webgraph_spark.plans.iterate import checkpoint_state
+from webgraph_spark.plans.partitioning import symmetrize_for_join
 
 PAIR_SLOTFORM_SCHEMA = (
     "src_block long, dst_block long, src_slot binary, dst_slot binary"
@@ -357,6 +359,38 @@ def unpersist_pair_slotform(csr: CsrGraph) -> None:
     if cached is not None:
         cached[1].unpersist()
         csr._pair_slotform_cache = None
+
+
+@contextmanager
+def symmetric_csr(edges: DataFrame, nodes: DataFrame | None = None):
+    """The undirected graph under ``edges``, ready for a symmetric kernel.
+
+    Yields ``(sym, csr, nodes)``: the symmetrized edge set, persisted across
+    ``build_csr``'s three scans; its CSR at ``build_csr``'s default block
+    count; and the node frame (every endpoint when ``nodes`` is None),
+    persisted. On exit the symmetrized set, the node frame and the pair
+    slot-form a kernel cached on ``csr`` are released, so a call leaves no
+    cached blocks behind. Block kernel results read only their checkpointed
+    state and outlive the release.
+    """
+    sym = symmetrize_for_join(edges, "src").persist()
+    if nodes is None:
+        nodes = (
+            edges.select(F.col("src").alias("id"))
+            .union(edges.select(F.col("dst").alias("id")))
+            .distinct()
+        )
+    nodes = nodes.select("id").persist()
+    csr = None
+    try:
+        sym.count()
+        csr = build_csr(sym)
+        yield sym, csr, nodes
+    finally:
+        if csr is not None:
+            unpersist_pair_slotform(csr)
+        nodes.unpersist()
+        sym.unpersist()
 
 
 def fixpoint(

@@ -59,7 +59,8 @@ def driver_memory(mem_bytes: int) -> str:
     return f"{max(1024, mem_bytes // 2 // 2**20)}m"
 
 
-def _local_cpus() -> str:
+def local_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
     return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
@@ -78,7 +79,7 @@ def get_spark(
     :func:`driver_memory` of :func:`host_memory_bytes`.
     """
     builder = SparkSession.builder.appName(app_name)
-    cpus = _local_cpus()
+    cpus = local_cpus()
     if master is None and "SPARK_MASTER" not in os.environ:
         master = f"local[{cpus}]"
     if master is not None:
