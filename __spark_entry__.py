@@ -861,16 +861,24 @@ def _q_block_kernels(spark, sf_dir):
     """Both block-vector fixpoint kernels — the 100-TB scale path — in one
     frame tagged by ``kernel`` (formerly the standalone ``labelprop_block``
     and ``cc_block`` queries): LPA (per-block dense label vectors, lexsort
-    vote combining) and hash-min CC, through the same edge-level entry
-    points and oracles as ``labelprop`` / ``cc_components``."""
+    vote combining) and hash-min CC on ONE shared symmetric layout, so the
+    graph is laid out and its slot-form built once for both. Same oracles
+    as ``labelprop`` / ``cc_components``."""
+    from webgraph_spark.algo.components_block import hash_min_components_block
+    from webgraph_spark.algo.labelprop_block import label_propagation_block
+    from webgraph_spark.plans.blockvec import symmetric_graph
+
     e = _edges(spark, sf_dir)
-    lpa = label_propagation(e, _nodes(e), max_iter=LPA_ITERS).labels.select(
+    with symmetric_graph(e, _nodes(e)) as (graph, nodes):
+        lpa = label_propagation_block(spark, graph, nodes, max_iter=LPA_ITERS)
+        cc = hash_min_components_block(spark, graph, nodes)
+    return lpa.labels.select(
         F.lit("lpa").alias("kernel"), "id", F.col("label").alias("value")
+    ).unionByName(
+        cc.components.select(
+            F.lit("cc").alias("kernel"), "id", F.col("comp").alias("value")
+        )
     )
-    cc = hash_min_components(e, _nodes(e)).components.select(
-        F.lit("cc").alias("kernel"), "id", F.col("comp").alias("value")
-    )
-    return lpa.unionByName(cc)
 
 
 def _q_pagerank_edges(spark, sf_dir):

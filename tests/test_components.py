@@ -65,6 +65,21 @@ def test_er_vs_union_find(spark, seed):
     assert _comp_map(res.components) == cc_union_find(arcs, nodes)
 
 
+def test_shifted_ids_give_shifted_components(spark):
+    # ids need only be dense, not small: the same graph shifted by 2**40
+    # gives the same components, shifted
+    shift = 2**40
+    arcs = [(0, 1), (1, 2), (10, 11)]
+    ids = [0, 1, 2, 10, 11, 20]
+    edges = spark.createDataFrame(
+        [(s + shift, d + shift) for s, d in arcs], "src long, dst long"
+    )
+    nodes = spark.createDataFrame([(i + shift,) for i in ids], "id long")
+    got = _comp_map(hash_min_components(edges, nodes).components)
+    base = {0: 0, 1: 0, 2: 0, 10: 10, 11: 10, 20: 20}
+    assert got == {i + shift: c + shift for i, c in base.items()}
+
+
 def test_directed_arcs_treated_undirected(spark):
     # 0->1, 2->1: one component despite no directed path 0..2.
     edges = spark.createDataFrame([(0, 1), (2, 1)], "src long, dst long")

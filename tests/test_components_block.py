@@ -82,3 +82,48 @@ def test_slotform_cache_reused_across_kernels(spark, tmp_path):
         initial_state=ck.load_iteration(2), start_iteration=2,
     )
     assert dcsr._pair_slotform_cache is cached
+
+
+def test_symmetric_graph_slotform_matches_csr_decode(spark):
+    # the edge-list layout must cut the same pair slot-form a CSR of the
+    # symmetrized edges decodes to: both directions, duplicate arcs (a
+    # repeated row, an arc given both ways) dropped, a self-loop kept once
+    from webgraph_spark.plans.blockvec import (
+        SymmetricGraph,
+        block_ranges,
+        build_pair_slotform,
+        unpersist_pair_slotform,
+    )
+
+    arcs = er_arcs(60, 0.08, 4) + [(3, 7), (3, 7), (7, 3), (9, 9)]
+    edges = spark.createDataFrame(arcs, "src long, dst long")
+    nodes = spark.createDataFrame([(i,) for i in range(60)], "id long")
+    csr = build_csr(symmetrize_for_join(edges, "src"), num_blocks=3)
+    graph = SymmetricGraph(edges, csr.cuts)
+    ranges = block_ranges(
+        nodes.withColumn("block_id", csr.node_block_id_col("id"))
+        .groupBy("block_id")
+        .agg(F.min("id").alias("lo"), F.max("id").alias("hi"))
+        .collect()
+    )
+
+    def rows(g):
+        out = sorted(
+            tuple(r) for r in build_pair_slotform(g, *ranges, 4).collect()
+        )
+        unpersist_pair_slotform(g)
+        return out
+
+    got = rows(graph)
+    assert got == rows(csr)
+    assert len(got) == len({r[:2] for r in got})  # one row per block pair
+
+
+def test_sparse_ids_raise_before_allocating(spark):
+    # dense block state would span 2**40 slots for two nodes: refuse, and
+    # say how to fix it, instead of asking for terabytes
+    from webgraph_spark.algo.components import hash_min_components
+
+    edges = spark.createDataFrame([(0, 2**40)], "src long, dst long")
+    with pytest.raises(Exception, match="dense block state needs dense ids"):
+        hash_min_components(edges).components.collect()

@@ -118,20 +118,23 @@ def test_near_dup_clusters_transitive_closure(spark):
 
 
 def test_near_dup_clusters_sparse_ids(spark):
-    # the clusterer takes document ids as they come: ids far apart (no dense
-    # renumbering) give the same clusters, shifted
+    # the clusterer takes document ids as they come: ids 2**32 apart and
+    # past 2**40 (no dense renumbering, no dense state) give the same
+    # clusters under the same order-preserving map
     from webgraph_spark.functions.dedup import near_dup_clusters
 
-    shift = 2**40
+    def spread(i):
+        return i * 2**32 + 2**40
+
     dense = {
         r["doc_id"]: r["cluster"]
         for r in near_dup_clusters(_docs(spark), threshold=0.5, bands=32).collect()
     }
     sparse_docs = spark.createDataFrame(
-        [(i + shift, t) for i, t in DOCS], "doc_id long, text string"
+        [(spread(i), t) for i, t in DOCS], "doc_id long, text string"
     )
     sparse = {
         r["doc_id"]: r["cluster"]
         for r in near_dup_clusters(sparse_docs, threshold=0.5, bands=32).collect()
     }
-    assert sparse == {i + shift: c + shift for i, c in dense.items()}
+    assert sparse == {spread(i): spread(c) for i, c in dense.items()}

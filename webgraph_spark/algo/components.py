@@ -49,7 +49,11 @@ def hash_min_components(
 
     Convergence in O(diameter) rounds. Isolated nodes (present in ``nodes``
     but no arcs) keep their own id as component; ``nodes`` defaults to every
-    edge endpoint and must cover them all. Caches nothing past the call.
+    edge endpoint and must cover them all. Node ids must be dense (the block
+    state is one vector cell per id in each block's range): ids spread far
+    wider than their count raise (renumber with
+    ``sources.ids.mint_dense_ids``; a constant offset is fine). Caches
+    nothing past the call.
 
     If still unconverged after :data:`STAR_FINISH_AFTER` rounds (and
     ``max_iter`` allows that many), finishes with
@@ -58,11 +62,11 @@ def hash_min_components(
     in ``iterations`` with a changed count of -1.
     """
     from webgraph_spark.algo.components_block import hash_min_components_block
-    from webgraph_spark.plans.blockvec import symmetric_csr
+    from webgraph_spark.plans.blockvec import symmetric_graph
 
-    with symmetric_csr(edges, nodes) as (sym, csr, nodes):
+    with symmetric_graph(edges, nodes) as (graph, nodes):
         result = hash_min_components_block(
-            edges.sparkSession, csr, nodes,
+            edges.sparkSession, graph, nodes,
             max_iter=min(max_iter, STAR_FINISH_AFTER),
         )
         if (
@@ -73,7 +77,7 @@ def hash_min_components(
         # long-chain graph: the partial labels are same-component by
         # construction, so they seed the contraction as extra edges
         comps = result.components
-        seed_edges = sym.select("src", "dst").union(
+        seed_edges = graph.edges.select("src", "dst").union(
             comps.filter(F.col("id") != F.col("comp")).select(
                 F.col("id").alias("src"), F.col("comp").alias("dst")
             )

@@ -14,9 +14,10 @@ block-vector engine (:mod:`webgraph_spark.plans.blockvec`):
 Exact integer minima; the fixpoint is the min node id per component
 (differential-tested against union-find). Rounds are O(diameter) like any
 hash-min. The edge-level entry point
-:func:`webgraph_spark.algo.components.hash_min_components` symmetrizes, builds
-the CSR, runs this kernel and owns the large-star/small-star finish for
-pathological diameters; this kernel owns checkpoint/resume.
+:func:`webgraph_spark.algo.components.hash_min_components` lays the edge list
+out as a :class:`webgraph_spark.plans.blockvec.SymmetricGraph`, runs this
+kernel and owns the large-star/small-star finish for pathological diameters;
+this kernel owns checkpoint/resume.
 """
 
 from __future__ import annotations
@@ -76,7 +77,8 @@ def hash_min_components_block(
 ) -> ComponentsResult:
     """Hash-min CC over a CSR of the SYMMETRIZED loop-free graph.
 
-    ``csr_sym`` must be built from the symmetrized edge set (see
+    ``csr_sym`` is a :class:`webgraph_spark.plans.blockvec.SymmetricGraph`
+    or a CSR built from the symmetrized edge set (see
     :func:`webgraph_spark.plans.partitioning.symmetrize_for_join`); the
     caller owns that contract. ``nodes`` must cover every edge endpoint
     (``ValueError`` otherwise). Converges when no label changes.

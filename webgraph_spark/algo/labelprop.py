@@ -39,12 +39,14 @@ def label_propagation(
 
     ``nodes`` defaults to every edge endpoint and must cover them all;
     ``initial`` is an ``(id, label)`` warm start (nodes it misses start from
-    their own id). Caches nothing past the call.
+    their own id). Node ids must be dense, as for
+    :func:`webgraph_spark.algo.components.hash_min_components`. Caches
+    nothing past the call.
     """
     from webgraph_spark.algo.labelprop_block import label_propagation_block
-    from webgraph_spark.plans.blockvec import symmetric_csr
+    from webgraph_spark.plans.blockvec import symmetric_graph
 
-    with symmetric_csr(edges, nodes) as (_, csr, nodes):
+    with symmetric_graph(edges, nodes) as (graph, nodes):
         return label_propagation_block(
-            edges.sparkSession, csr, nodes, max_iter=max_iter, initial=initial
+            edges.sparkSession, graph, nodes, max_iter=max_iter, initial=initial
         )

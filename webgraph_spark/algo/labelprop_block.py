@@ -16,8 +16,9 @@ The one LPA kernel. It runs on the shared block-vector engine
 
 Votes are integer counts, so there is no float-order hazard at all. The
 edge-level entry point :func:`webgraph_spark.algo.labelprop
-.label_propagation` symmetrizes, builds the CSR and runs this kernel; this
-kernel owns checkpoint/resume.
+.label_propagation` lays the edge list out as a
+:class:`webgraph_spark.plans.blockvec.SymmetricGraph` and runs this kernel;
+this kernel owns checkpoint/resume.
 
 Under the pinned two-level protocol of earlier rounds it measured scaling
 efficiency 1.01 at 113.7M edges (``BENCH_SCALING.json``
@@ -98,8 +99,9 @@ def label_propagation_block(
 ) -> LabelPropResult:
     """Synchronous LPA over a CSR of the SYMMETRIZED loop-free graph.
 
-    ``csr_sym`` must be built from the symmetrized edge set (both directions
-    present, duplicates removed) — the caller owns that contract; see
+    ``csr_sym`` is a :class:`webgraph_spark.plans.blockvec.SymmetricGraph`
+    or a CSR built from the symmetrized edge set (both directions present,
+    duplicates removed) — the caller owns that contract; see
     :func:`webgraph_spark.plans.partitioning.symmetrize_for_join`. ``nodes``
     must cover every edge endpoint (``ValueError`` otherwise). Stops at
     fixpoint or after ``max_iter`` rounds.

@@ -29,8 +29,15 @@ shuffle a single time. The builder validates that the state layout covers
 every edge endpoint: a slot outside its block's range would wrap around the
 state vector and silently corrupt the gather, so it raises instead.
 
-Dense state assumes reasonably dense node ids (``sources/ids.mint_dense_ids``
-renumbers to 0..n-1, as WebGraph does).
+The symmetric kernels (CC, LPA) need no varint CSR: :func:`symmetric_graph`
+lays out the undirected graph under an edge list as a :class:`SymmetricGraph`
+(arc-mass-balanced cuts only), and the slot-form is packed straight from the
+edge list — both directions, per edge partition, merged and de-duplicated by
+one shuffle of the packed pair rows.
+
+Dense state needs dense node ids (``sources/ids.mint_dense_ids`` renumbers to
+0..n-1, as WebGraph does): a block whose id range is far wider than its node
+count raises ``ValueError`` instead of allocating the range.
 """
 
 from __future__ import annotations
@@ -42,12 +49,13 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from webgraph_spark.plans.csr import CsrGraph, build_csr, decode_block
+from webgraph_spark.plans.csr import CsrGraph, decode_block
 from webgraph_spark.plans.iterate import checkpoint_state
-from webgraph_spark.plans.partitioning import symmetrize_for_join
+from webgraph_spark.plans.partitioning import block_id_column
 
 PAIR_SLOTFORM_SCHEMA = (
     "src_block long, dst_block long, src_slot binary, dst_slot binary"
@@ -55,6 +63,17 @@ PAIR_SLOTFORM_SCHEMA = (
 
 _ARROW = {"long": pa.int64(), "double": pa.float64(), "binary": pa.binary()}
 _SPARK = {"int64": "long", "float64": "double"}
+
+# a block's dense vectors may span at most this many ids per live node, plus
+# the slack, before the ids count as too sparse to allocate
+SPARSE_SPAN_FACTOR = 64
+SPARSE_SPAN_SLACK = 1 << 20
+
+# symmetrized arcs per block of a SymmetricGraph (build_csr's default), and
+# the histogram buckets its cuts are read from: 4096 buckets place each of
+# up to a few hundred cuts within a fraction of its block's share
+SYMMETRIC_ARCS_PER_BLOCK = 250_000
+CUT_BUCKETS = 4096
 
 
 @dataclass
@@ -173,6 +192,12 @@ def _init_state(csr: CsrGraph, node_values: DataFrame, spec: BlockSpec) -> DataF
 
         ids = pdf["id"].to_numpy(np.int64)
         lo, hi = int(ids.min()), int(ids.max())
+        if hi - lo + 1 > SPARSE_SPAN_FACTOR * ids.size + SPARSE_SPAN_SLACK:
+            raise ValueError(
+                f"block {int(key[0])}: {ids.size} node ids spread over "
+                f"[{lo}, {hi}] — dense block state needs dense ids; renumber "
+                "them first (sources.ids.mint_dense_ids)"
+            )
         mask = np.zeros(hi - lo + 1, dtype=np.int8)
         mask[ids - lo] = 1
         row = {"block_id": [int(key[0])], "lo": [lo], "hi": [hi],
@@ -242,28 +267,10 @@ def _fold_kernel(spec: BlockSpec):
     return fold
 
 
-def build_pair_slotform(
-    csr: CsrGraph,
-    rng_bid: np.ndarray,
-    rng_lo: np.ndarray,
-    rng_hi: np.ndarray,
-    shuffle_parts: int,
-) -> DataFrame:
-    """Decode ``csr`` into the cached pair slot-form (persisted, counted).
-
-    ``rng_bid``/``rng_lo``/``rng_hi`` are the sorted block ids and range
-    bounds of the state layout (``block_ranges``); slots are relative to
-    those bounds. Raises ``ValueError`` if any edge endpoint falls outside
-    its block's state range (the ``nodes`` frame must cover every endpoint).
-    Reuses a previously built slot-form for the same (layout, width) via a
-    cache on the CsrGraph handle; a superseded cache entry is unpersisted
-    before being replaced.
-    """
-    cache_key = (shuffle_parts, rng_bid.tobytes(), rng_lo.tobytes())
-    cached = getattr(csr, "_pair_slotform_cache", None)
-    if cached is not None and cached[0] == cache_key:
-        return cached[1]
-
+def _decode_kernel(
+    csr: CsrGraph, rng_bid: np.ndarray, rng_lo: np.ndarray, rng_hi: np.ndarray
+):
+    """mapInArrow kernel: varint CSR blocks -> pair slot-form rows."""
     cuts = np.asarray(csr.cuts, dtype=np.int64)
 
     def slotform_kernel(batches):
@@ -333,27 +340,188 @@ def build_pair_slotform(
                 }
             )
 
-    blocks = (
-        csr.blocks.repartition(shuffle_parts, "block_id")
-        .sortWithinPartitions("block_id")
-        .persist()
+    return slotform_kernel
+
+
+@dataclass
+class SymmetricGraph:
+    """Block layout of the undirected graph under ``edges(src, dst)`` for the
+    symmetric kernels (CC, LPA), built by :func:`symmetric_graph`.
+
+    It stands in for a CSR of the symmetrized edge set wherever the engine
+    takes one: ``cuts`` split the ids into ranges of ~equal symmetrized edge
+    mass, and :func:`build_pair_slotform` cuts the pair slot-form straight
+    from ``edges`` (both directions, duplicates dropped), with no varint
+    encode or decode in between.
+    """
+
+    edges: DataFrame
+    cuts: list[int]
+
+    def node_block_id_col(self, col: str = "id"):
+        """Block id for any node id under the same cuts."""
+        return block_id_column(self.cuts, col)
+
+
+def _concat(batches) -> pa.Table | None:
+    """A partition's Arrow batches as one table, None when it holds no rows."""
+    batches = list(batches)
+    tbl = pa.Table.from_batches(batches) if batches else None
+    return tbl if tbl is not None and tbl.num_rows else None
+
+
+def _pack_pairs(
+    nb: int, sb: np.ndarray, db: np.ndarray, ss: np.ndarray, ds: np.ndarray
+) -> pa.RecordBatch:
+    """Arcs given by their (block, slot) ends -> pair slot-form rows: one per
+    (src_block, dst_block) pair of the ``nb`` blocks, duplicate arcs dropped,
+    arcs in (src, dst) order as a CSR decode gives them."""
+    pair = sb * nb + db
+    bits = int(max(ss.max(initial=0), ds.max(initial=0))).bit_length()
+    arc = (ss.astype(np.int64) << bits) | ds
+    if (nb * nb).bit_length() + 2 * bits <= 63:
+        # (pair, arc) fits one int64: a single argsort, ~10x a lexsort
+        order = np.argsort((pair << 2 * bits) | arc)
+    else:
+        order = np.lexsort((arc, pair))
+    pair, arc = pair[order], arc[order]
+    keep = np.ones(pair.size, dtype=bool)
+    keep[1:] = (pair[1:] != pair[:-1]) | (arc[1:] != arc[:-1])
+    pair, arc = pair[keep], arc[keep]
+    starts = np.flatnonzero(np.r_[True, pair[1:] != pair[:-1]])
+    ends = np.r_[starts[1:], pair.size]
+    ss = (arc >> bits).astype(np.int32)
+    ds = (arc & ((1 << bits) - 1)).astype(np.int32)
+    return pa.RecordBatch.from_pydict(
+        {
+            "src_block": pa.array(pair[starts] // nb, pa.int64()),
+            "dst_block": pa.array(pair[starts] % nb, pa.int64()),
+            "src_slot": pa.array(
+                [ss[a:b].tobytes() for a, b in zip(starts, ends)], pa.binary()
+            ),
+            "dst_slot": pa.array(
+                [ds[a:b].tobytes() for a, b in zip(starts, ends)], pa.binary()
+            ),
+        }
     )
-    blocks.count()
-    slotform = (
-        blocks.mapInArrow(slotform_kernel, schema=PAIR_SLOTFORM_SCHEMA)
+
+
+def _arc_pairs(
+    graph: SymmetricGraph,
+    rng_bid: np.ndarray,
+    rng_lo: np.ndarray,
+    rng_hi: np.ndarray,
+    shuffle_parts: int,
+) -> DataFrame:
+    """Pair slot-form rows of ``graph``: each edge-list partition packs its
+    arcs (both directions) into pair rows, and one shuffle of those rows by
+    source block brings each pair's pieces together to be merged. Arcs move
+    as packed slot arrays, never as one Spark row each."""
+    cuts = np.asarray(graph.cuts, dtype=np.int64)
+    nb = cuts.size + 1
+
+    def slots(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        blk = np.searchsorted(cuts, ids, side="left")
+        if not rng_bid.size:
+            raise ValueError(
+                "edges but no state ranges — the nodes frame must cover "
+                "every edge endpoint"
+            )
+        pos = np.minimum(np.searchsorted(rng_bid, blk), rng_bid.size - 1)
+        lo = rng_lo[pos]
+        bad = (rng_bid[pos] != blk) | (ids < lo) | (ids > rng_hi[pos])
+        if bad.any():
+            raise ValueError(
+                f"node {int(ids[bad][0])} outside every state range — the "
+                "nodes frame must cover every edge endpoint"
+            )
+        return blk, (ids - lo).astype(np.int32)
+
+    def pack(batches):
+        tbl = _concat(batches)
+        if tbl is not None:
+            sb, ss = slots(tbl.column("src").to_numpy().astype(np.int64))
+            db, ds = slots(tbl.column("dst").to_numpy().astype(np.int64))
+            yield _pack_pairs(
+                nb, np.r_[sb, db], np.r_[db, sb], np.r_[ss, ds], np.r_[ds, ss]
+            )
+
+    def merge(batches):
+        tbl = _concat(batches)
+        if tbl is not None:
+            src_slot, dst_slot = (
+                [np.frombuffer(b, dtype=np.int32) for b in tbl.column(c).to_pylist()]
+                for c in ("src_slot", "dst_slot")
+            )
+            sizes = [a.size for a in src_slot]
+            yield _pack_pairs(
+                nb,
+                np.repeat(tbl.column("src_block").to_numpy(), sizes),
+                np.repeat(tbl.column("dst_block").to_numpy(), sizes),
+                np.concatenate(src_slot),
+                np.concatenate(dst_slot),
+            )
+
+    return (
+        graph.edges.select("src", "dst")
+        .mapInArrow(pack, schema=PAIR_SLOTFORM_SCHEMA)
         .repartition(shuffle_parts, "src_block")
+        .mapInArrow(merge, schema=PAIR_SLOTFORM_SCHEMA)
+    )
+
+
+def build_pair_slotform(
+    csr: CsrGraph | SymmetricGraph,
+    rng_bid: np.ndarray,
+    rng_lo: np.ndarray,
+    rng_hi: np.ndarray,
+    shuffle_parts: int,
+) -> DataFrame:
+    """Decode ``csr`` into the cached pair slot-form (persisted, counted).
+
+    ``rng_bid``/``rng_lo``/``rng_hi`` are the sorted block ids and range
+    bounds of the state layout (``block_ranges``); slots are relative to
+    those bounds. Raises ``ValueError`` if any edge endpoint falls outside
+    its block's state range (the ``nodes`` frame must cover every endpoint).
+    Reuses a previously built slot-form for the same (layout, width) via a
+    cache on the graph handle; a superseded cache entry is unpersisted
+    before being replaced. A :class:`SymmetricGraph` is cut from its edge
+    list instead of decoded.
+    """
+    cache_key = (shuffle_parts, rng_bid.tobytes(), rng_lo.tobytes())
+    cached = getattr(csr, "_pair_slotform_cache", None)
+    if cached is not None and cached[0] == cache_key:
+        return cached[1]
+
+    if isinstance(csr, SymmetricGraph):
+        blocks = None
+        pairs = _arc_pairs(csr, rng_bid, rng_lo, rng_hi, shuffle_parts)
+    else:
+        blocks = (
+            csr.blocks.repartition(shuffle_parts, "block_id")
+            .sortWithinPartitions("block_id")
+            .persist()
+        )
+        blocks.count()
+        pairs = blocks.mapInArrow(
+            _decode_kernel(csr, rng_bid, rng_lo, rng_hi),
+            schema=PAIR_SLOTFORM_SCHEMA,
+        )
+    slotform = (
+        pairs.repartition(shuffle_parts, "src_block")
         .sortWithinPartitions("src_block")
         .persist()
     )
     slotform.count()
-    blocks.unpersist()
+    if blocks is not None:
+        blocks.unpersist()
     if cached is not None:
         cached[1].unpersist()  # superseded layout: do not orphan its cache
     csr._pair_slotform_cache = (cache_key, slotform)
     return slotform
 
 
-def unpersist_pair_slotform(csr: CsrGraph) -> None:
+def unpersist_pair_slotform(csr: CsrGraph | SymmetricGraph) -> None:
     """Drop the cached slot-form (kernels leave it cached for reuse)."""
     cached = getattr(csr, "_pair_slotform_cache", None)
     if cached is not None:
@@ -361,36 +529,77 @@ def unpersist_pair_slotform(csr: CsrGraph) -> None:
         csr._pair_slotform_cache = None
 
 
-@contextmanager
-def symmetric_csr(edges: DataFrame, nodes: DataFrame | None = None):
-    """The undirected graph under ``edges``, ready for a symmetric kernel.
+def _arc_mass_cuts(
+    edges: DataFrame, num_blocks: int, lo: int, hi: int
+) -> list[int]:
+    """Interior cuts splitting the ids ``[lo, hi]`` into ``num_blocks``
+    ranges of ~equal symmetrized arc mass (both endpoint columns count).
 
-    Yields ``(sym, csr, nodes)``: the symmetrized edge set, persisted across
-    ``build_csr``'s three scans; its CSR at ``build_csr``'s default block
-    count; and the node frame (every endpoint when ``nodes`` is None),
-    persisted. On exit the symmetrized set, the node frame and the pair
-    slot-form a kernel cached on ``csr`` are released, so a call leaves no
-    cached blocks behind. Block kernel results read only their checkpointed
-    state and outlive the release.
+    One aggregate: a histogram of the ids over :data:`CUT_BUCKETS`
+    equal-width buckets, cut where its running sum crosses each
+    ``i / num_blocks`` share (a cut closes its left block, as in
+    ``degree_balanced_cuts``, whose ``approxQuantile`` costs 2-4x this
+    aggregate on a cached edge list).
     """
-    sym = symmetrize_for_join(edges, "src").persist()
-    if nodes is None:
-        nodes = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id")))
-            .distinct()
+    if num_blocks <= 1:
+        return []
+    width = -(-(hi - lo + 1) // CUT_BUCKETS)
+    hist = (
+        edges.select(
+            F.explode(
+                F.array(*[F.expr(f"({c} - {lo}) div {width}") for c in ("src", "dst")])
+            ).alias("b")
         )
-    nodes = nodes.select("id").persist()
-    csr = None
+        .groupBy("b")
+        .count()
+        .collect()
+    )
+    mass = np.zeros(CUT_BUCKETS, dtype=np.int64)
+    mass[[r["b"] for r in hist]] = [r["count"] for r in hist]
+    running = np.cumsum(mass)
+    shares = running[-1] * np.arange(1, num_blocks) / num_blocks
+    last = np.searchsorted(running, shares, side="left")  # bucket closing each share
+    return [int(c) for c in np.unique(lo + (last + 1) * width - 1) if c < hi]
+
+
+@contextmanager
+def symmetric_graph(edges: DataFrame, nodes: DataFrame | None = None):
+    """The undirected graph under ``edges(src, dst)``, ready for a symmetric
+    kernel.
+
+    Yields ``(graph, nodes)``: a :class:`SymmetricGraph` with one block per
+    ~:data:`SYMMETRIC_ARCS_PER_BLOCK` symmetrized arcs, and the node frame (every endpoint when ``nodes`` is None). ``edges`` is
+    persisted for the call unless the caller already cached it. On exit
+    that cache and the pair slot-form a kernel cached on ``graph`` are
+    released, so a call leaves no cached blocks behind. Block kernel results
+    read only their checkpointed state and outlive the release.
+    """
+    owned = edges.storageLevel == StorageLevel.NONE
+    if owned:
+        edges = edges.select("src", "dst").persist()
+    graph = None
     try:
-        sym.count()
-        csr = build_csr(sym)
-        yield sym, csr, nodes
+        span = edges.agg(
+            F.count(F.lit(1)).alias("m"),
+            F.least(F.min("src"), F.min("dst")).alias("lo"),
+            F.greatest(F.max("src"), F.max("dst")).alias("hi"),
+        ).first()
+        num_blocks = max(1, -(-2 * span["m"] // SYMMETRIC_ARCS_PER_BLOCK))
+        graph = SymmetricGraph(
+            edges, _arc_mass_cuts(edges, num_blocks, span["lo"], span["hi"])
+        )
+        if nodes is None:
+            nodes = (
+                edges.select(F.col("src").alias("id"))
+                .union(edges.select(F.col("dst").alias("id")))
+                .distinct()
+            )
+        yield graph, nodes.select("id")
     finally:
-        if csr is not None:
-            unpersist_pair_slotform(csr)
-        nodes.unpersist()
-        sym.unpersist()
+        if graph is not None:
+            unpersist_pair_slotform(graph)
+        if owned:
+            edges.unpersist()
 
 
 def fixpoint(
