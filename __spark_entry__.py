@@ -73,7 +73,7 @@ from webgraph_spark.algo.pagerank_block import pagerank_block
 from webgraph_spark.algo.triangles import (
     global_clustering_coefficient,
     local_clustering_coefficient,
-    triangle_vertices,
+    triangles_per_vertex,
 )
 from webgraph_spark.algo.kcore import k_core
 from webgraph_spark.algo.hits import hits
@@ -915,26 +915,14 @@ def _q_pagerank_weighted(spark, sf_dir):
 def _q_triangles(spark, sf_dir):
     """Per-vertex triangle participation plus the global count as the
     ``id = -1`` row — one frame keeps the driver surface at 50 entries.
-    A single ``rollup`` pass over the oriented-triangle corners yields both
-    (each triangle contributes 3 corner rows, so total = corners/3); the
-    independent adjacency-intersection counter stays differential-tested in
-    pytest and benchmarked in bench.py."""
-    t = triangle_vertices(_edges(spark, sf_dir))
-    corners = (
-        t.select(F.col("a").alias("id"))
-        .unionAll(t.select(F.col("b").alias("id")))
-        .unionAll(t.select(F.col("c").alias("id")))
+    Each triangle counts once at each of its 3 corners, so the total is the
+    per-vertex sum / 3."""
+    tv = triangles_per_vertex(_edges(spark, sf_dir))
+    total = tv.agg(
+        F.lit(-1).cast("long").alias("id"),
+        F.coalesce(F.expr("sum(triangles) div 3"), F.lit(0)).alias("triangles"),
     )
-    return (
-        corners.rollup("id")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .select(
-            F.coalesce(F.col("id"), F.lit(-1)).cast("long").alias("id"),
-            F.when(F.col("id").isNull(), F.expr("c div 3"))
-            .otherwise(F.col("c"))
-            .alias("triangles"),
-        )
-    )
+    return tv.unionByName(total)
 
 
 def _q_bfs(spark, sf_dir):
@@ -1959,7 +1947,7 @@ SELECT metric, value FROM (
         "pagerank_csr": _pagerank_sql(PR_ITERS),
         "pagerank_weighted": _pagerank_weighted_sql(PR_ITERS),
         # per-vertex participation + the global count as the id = -1 row
-        # (matches _q_triangles' single-pass rollup; total = corners / 3)
+        # (matches _q_triangles: total = per-vertex sum / 3)
         "triangles": _with(
             *_ORIENTED_CTES,
             select="SELECT id, count(*) AS triangles FROM ("

@@ -10,7 +10,7 @@ from webgraph_spark.algo.components import hash_min_components
 from webgraph_spark.algo.labelprop import label_propagation
 from webgraph_spark.algo.pagerank_block import pagerank_block
 from webgraph_spark.algo.scc import strongly_connected_components
-from webgraph_spark.algo.triangles import triangle_count, triangle_count_adjacency
+from webgraph_spark.algo.triangles import triangle_count_adjacency
 from webgraph_spark.plans.csr import build_csr, csr_to_edges
 
 
@@ -54,5 +54,5 @@ def test_cc_lpa_scc_on_degenerate(spark):
 
 
 def test_triangles_on_degenerate(spark):
-    assert triangle_count(_empty(spark)) == 0
+    assert triangle_count_adjacency(_empty(spark)) == 0
     assert triangle_count_adjacency(_loop(spark)) == 0

@@ -13,20 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from webgraph_spark.algo.bfs import bfs_distances
+from webgraph_spark.algo.bfs import bfs_distances, eccentricity_info
 from webgraph_spark.operators.transform import transpose
-
-
-def _ecc_and_far_node(edges: DataFrame, source_id: int, max_depth: int = 128):
-    dist = bfs_distances(
-        edges,
-        edges.sparkSession.createDataFrame([(source_id,)], "id long"),
-        max_depth=max_depth,
-    )
-    row = dist.agg(
-        F.max("dist").alias("ecc"), F.max_by("id", "dist").alias("far")
-    ).collect()[0]
-    return int(row["ecc"]), int(row["far"])
 
 
 def double_sweep_lower_bound(
@@ -43,7 +31,8 @@ def double_sweep_lower_bound(
     history = []
     for s in range(sweeps):
         g = fwd if s % 2 == 0 else rev
-        ecc, far = _ecc_and_far_node(g, node)
+        src = edges.sparkSession.createDataFrame([(node,)], "id long")
+        ecc, far = eccentricity_info(bfs_distances(g, src, max_depth=128)).values()
         history.append({"sweep": s, "source": node, "ecc": ecc, "far": far})
         best = max(best, ecc)
         node = far

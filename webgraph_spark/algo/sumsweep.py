@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from webgraph_spark.plans.iterate import checkpoint_state
 
-from webgraph_spark.algo.bfs import bfs_distances
+from webgraph_spark.algo.bfs import bfs_distances, eccentricity_info
 from webgraph_spark.operators.transform import transpose
 
 _INF = 1 << 30
@@ -45,13 +45,6 @@ def _sssp(edges: DataFrame, node: int, max_depth: int) -> DataFrame:
     spark = edges.sparkSession
     src = spark.createDataFrame([(int(node),)], "id long")
     return bfs_distances(edges, src, max_depth=max_depth)
-
-
-def _ecc_far(dist: DataFrame) -> tuple[int, int]:
-    row = dist.agg(
-        F.max("dist").alias("ecc"), F.max_by("id", "dist").alias("far")
-    ).collect()[0]
-    return int(row["ecc"]), int(row["far"])
 
 
 def four_sweep(edges: DataFrame, start: int | None = None, max_depth: int = 1024) -> dict:
@@ -66,7 +59,7 @@ def four_sweep(edges: DataFrame, start: int | None = None, max_depth: int = 1024
         start = int(edges.agg(F.min("src")).collect()[0][0])
     pivots, lb, node = [], 0, start
     for g in (fwd, bwd, fwd, bwd):
-        ecc, far = _ecc_far(_sssp(g, node, max_depth))
+        ecc, far = eccentricity_info(_sssp(g, node, max_depth)).values()
         pivots.append(node)
         lb = max(lb, ecc)
         node = far
@@ -136,7 +129,7 @@ def sumsweep_diameter_radius(
         (forward, backward) so callers can chain sweeps without extra BFS."""
         nonlocal bounds, dl, ru
         dist_f = _sssp(fwd, w, max_depth).persist()
-        ecc_f, far_f = _ecc_far(dist_f)
+        ecc_f, far_f = eccentricity_info(dist_f).values()
         dist_b = dist_f if symmetric else _sssp(bwd, w, max_depth)
         res.bfs_runs += 1 if symmetric else 2
         res.ecc_exact[w] = ecc_f
@@ -167,7 +160,9 @@ def sumsweep_diameter_radius(
         )
         dist_f.unpersist()
         res.sweeps += 1
-        _, far_b = _ecc_far(dist_b) if ecc_f else (0, w)
+        far_b = (
+            eccentricity_info(dist_b)["node_at_max_distance"] if ecc_f else w
+        )
         return far_f, far_b
 
     # -- warm-up: four-sweep style alternation from min id ----------------

@@ -4,28 +4,48 @@ Not in the reference (no triangle code anywhere in /root/reference); input
 semantics come from its ``simplify`` transform (``Transform.java:835-894``):
 triangles are counted on the symmetrized, loop-free graph. Orientation by
 (degree, id) — each undirected edge directed from the lower-ranked endpoint —
-bounds the join fan-out by the graph arboricity (the standard trick that
-keeps the wedge join from exploding on hubs). Oriented wedge join + closing
-semi-join are plain equi joins; AQE handles residual skew.
+bounds every successor array near √(2m) (the standard trick that keeps hubs
+from exploding the work). One plan finds triangles: each oriented edge
+(u, v) is joined with the sorted successor arrays of both endpoints, and
+``array_intersect(succ(u), succ(v))`` holds exactly the third corners w of
+the triangles whose lowest-ranked edge is (u, v) — each triangle once. The
+count sums the intersect sizes; the per-vertex listing explodes them.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from webgraph_spark.plans.iterate import checkpoint_state
+
+
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """Symmetrized, loop-free, deduplicated arcs, hash-partitioned by src.
+
+    Built in one shuffle: dedup clusters by (src, dst), which the
+    src-partitioning already satisfies, and a degree aggregate over the
+    result then needs no exchange of its own — two exchanges saved vs the
+    naive ``simplify() + groupBy`` plan.
+    """
+    p = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    return (
+        edges.unionByName(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        .filter(F.col("src") != F.col("dst"))
+        .repartition(p, "src")
+        .dropDuplicates(["src", "dst"])
+    )
+
 
 def _oriented(edges: DataFrame, pre_symmetrized: bool = False) -> DataFrame:
-    """Symmetrize+deloop, then orient each undirected edge low->high by
-    (undirected degree, id).
+    """Orient each undirected edge low->high by (undirected degree, id).
 
-    The symmetrized set is built hash-partitioned by src in one shuffle
-    (dedup clusters by (src, dst), satisfied by src-partitioning), and the
-    degree aggregate then needs no exchange of its own — two exchanges
-    saved vs the naive ``simplify() + groupBy`` plan.
-
-    ``pre_symmetrized=True`` skips that build entirely: the caller asserts
-    ``edges`` is already symmetric, loop-free, deduplicated, and
+    ``pre_symmetrized=True`` skips the ``_symmetric`` build: the caller
+    asserts ``edges`` is already symmetric, loop-free, deduplicated, and
     hash-partitioned by src (the clustering entry points construct exactly
     that frame and persist it) — re-symmetrizing it would be a wasted
     O(2m) shuffle + dedup per call.
@@ -40,21 +60,7 @@ def _oriented(edges: DataFrame, pre_symmetrized: bool = False) -> DataFrame:
     (de)serialization churn (0.9M input arcs/partition cost 2× at m=28M).
     Count scales with data, bytes/partition is the invariant.
     """
-    spark = edges.sparkSession
-    p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    if pre_symmetrized:
-        simple = edges
-    else:
-        simple = (
-            edges.unionByName(
-                edges.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-            )
-            .filter(F.col("src") != F.col("dst"))
-            .repartition(p, "src")
-            .dropDuplicates(["src", "dst"])
-        )
+    simple = edges if pre_symmetrized else _symmetric(edges)
     und = simple.filter(F.col("src") < F.col("dst"))
     deg = simple.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("deg")
@@ -71,74 +77,29 @@ def _oriented(edges: DataFrame, pre_symmetrized: bool = False) -> DataFrame:
     )
 
 
-def triangle_vertices(edges: DataFrame) -> DataFrame:
-    """All triangles as rows ``(a, b, c)`` — one row per triangle, corners in
-    orientation order (a->b, a->c, b->c in the oriented graph).
+@contextmanager
+def _oriented_adjacency(edges: DataFrame, pre_symmetrized: bool = False):
+    """Yield ``(v, u, su, sv)``: every oriented edge (u, v) with the sorted
+    successor arrays of both endpoints. The oriented set and the adjacency
+    are cached for the ``with`` block and released on exit, so a caller
+    must run (or checkpoint) its action inside the block.
 
-    The oriented edge set is persisted: it feeds three plan branches (both
-    wedge sides and the closing semi-join) and the symmetrize + dedup +
-    degree-orientation subtree behind it is two shuffles — recomputing it per
-    branch tripled the triangle wall time (measured 2-6x at sf0.1; exchange
-    reuse does not reliably cover the three consumers). The cache is the
-    oriented arc list (~m rows), evicted LRU like the other graph-side
-    caches, and is materialized EAGERLY: the three consumer stages of the
-    downstream action launch concurrently and would otherwise race to
-    populate it, each recomputing the symmetrize+orient subtree.
-    """
-    o = _oriented(edges).persist()
-    o.count()
-    return _triangle_corners(o)
-
-
-def _triangle_corners(o: DataFrame) -> DataFrame:
-    """Triangle rows from an already-persisted oriented edge set ``o``
-    (callers own ``o``'s lifecycle)."""
-    e1 = o.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    e2 = o.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    wedges = e1.join(e2, "b").select("a", "b", "c")
-    closing = o.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-    return wedges.join(closing, ["a", "c"], "leftsemi").select("a", "b", "c")
-
-
-def triangle_count(edges: DataFrame) -> int:
-    """Global exact triangle count (wedge-join formulation).
-
-    Owns the oriented cache's lifecycle — unlike ``triangle_vertices``
-    (whose returned frame still reads from the cache, so the caller owns
-    it), repeated counts in one JVM leave no cached blocks behind.
-    """
-    o = _oriented(edges).persist()
-    try:
-        o.count()
-        return _triangle_corners(o).count()
-    finally:
-        o.unpersist()
-
-
-def triangle_count_adjacency(
-    edges: DataFrame, pre_symmetrized: bool = False
-) -> int:
-    """Edge-iterator variant: per oriented edge (u, v), |succ(u) ∩ succ(v)|
-    summed — the sorted-array-intersection formulation (SURVEY §2.6),
-    expressed with JVM-side ``array_intersect`` (no wedge materialization,
-    no Python). Wins when wedge count ≫ Σ(deg(u)+deg(v)) per edge, i.e.
-    hub-heavy graphs where the wedge join explodes.
-
-    ``o`` feeds three consumers (adjacency build + both join sides) and
-    ``adj`` two (both intersect sides), so BOTH are persisted AND eagerly
-    materialized before the counting action: inside a single action the
-    consumer stages launch concurrently and race to populate the cache,
-    each recomputing the full symmetrize+orient subtree (measured at sf0.1
-    on 24 cores: 12.4 s single-action vs 1.9 + 0.5 + 0.9 s materialized —
-    the cache only dedupes work that finished before the next reader).
+    The oriented set feeds three consumers (adjacency build + both join
+    sides) and the adjacency two (both array sides), so BOTH are persisted
+    AND eagerly materialized before the caller's action: inside a single
+    action the consumer stages launch concurrently and race to populate the
+    cache, each recomputing the full symmetrize+orient subtree (measured at
+    sf0.1 on 24 cores: 12.4 s single-action vs 1.9 + 0.5 + 0.9 s
+    materialized — the cache only dedupes work that finished before the
+    next reader).
 
     The dominant shuffle is NOT the edge rows but the per-edge successor
     arrays: joining ``sv`` onto the edge list moves Σ_(u,v) |succ(u)| ids —
     the wedge count in bytes. When the max node id fits in int32 (checked
     for free on the materialization action via ``observe``) every id in
     that shuffle is narrowed long→int, halving the hot shuffle volume and
-    executor array footprint. At 10^12-file scale node ids exceed int32 and
-    the kernel transparently stays on longs.
+    executor array footprint; the yielded ids are then ints. At 10^12-file
+    scale node ids exceed int32 and the plan transparently stays on longs.
     """
     obs = Observation()
     o = (
@@ -164,118 +125,73 @@ def triangle_count_adjacency(
         adj.count()
         au = adj.select(F.col("src").alias("u"), F.col("succ").alias("su"))
         av = adj.select(F.col("src").alias("v"), F.col("succ").alias("sv"))
-        per_edge = (
+        yield (
             oc.select(F.col("src").alias("u"), F.col("dst").alias("v"))
             .join(au, "u")
             .join(av, "v")  # v with no oriented successors closes no triangle
-            .select(F.size(F.array_intersect("su", "sv")).alias("t"))
         )
-        row = per_edge.agg(F.sum("t").alias("total")).collect()[0]
-        return int(row["total"] or 0)
     finally:
         o.unpersist()
         if adj is not None:
             adj.unpersist()
 
 
-def triangle_count_wedge_agg(edges: DataFrame) -> int:
-    """Global count via map-side-combined wedge aggregation.
-
-    Same oriented graph as the other variants, different shuffle currency:
-    the wedge join's output is combined into ``(a, c) -> wedge_count``
-    partials BEFORE its exchange (hash aggregate with map-side combine), so
-    the network moves distinct distance-2 endpoint pairs per map partition,
-    not raw wedges — and never the successor ARRAYS the adjacency variant
-    ships per edge (measured at m16/28.4M edges: the array join's
-    deserialized-array memory pressure produces 1.5-2.4x wall variance
-    run-to-run; this plan's rows stay in Tungsten format end to end). The
-    closing test is then an equi-join of the combined partials with the
-    oriented edge set on (a, c) and one final sum.
-
-    Counting only — corner identities are aggregated away; use
-    ``triangle_vertices`` when the actual triangles are needed.
-
-    Shuffle budget per run: 2 x O(m) (wedge join sides) + O(distinct (a,c)
-    pairs, post-combine) + O(m) (closing join side). Ids narrow to int32
-    under the same observed max-id guard as the adjacency variant.
-    """
-    obs = Observation()
-    o = (
-        _oriented(edges)
-        .observe(obs, F.max(F.greatest("src", "dst")).alias("mx"))
-        .persist()
-    )
-    try:
-        o.count()
-        mx = obs.get["mx"]
-        oc = o
-        if mx is not None and mx < 2**31:
-            oc = o.select(
-                F.col("src").cast("int").alias("src"),
-                F.col("dst").cast("int").alias("dst"),
-            )
-        e1 = oc.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        e2 = oc.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-        w = (
-            e1.join(e2, "b")
-            .groupBy("a", "c")
-            .agg(F.count(F.lit(1)).alias("wc"))
+def _corner_counts(per_edge: DataFrame) -> DataFrame:
+    """``(id, triangles)`` from ``_oriented_adjacency``'s rows: each
+    (u, v, w) corner triple counts once at each of its three corners."""
+    return (
+        per_edge.select(
+            "u", "v", F.explode(F.array_intersect("su", "sv")).alias("w")
         )
-        closing = oc.select(F.col("src").alias("a"), F.col("dst").alias("c"))
+        .select(F.explode(F.array("u", "v", "w")).alias("id"))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("triangles"))
+        .select(F.col("id").cast("long").alias("id"), "triangles")
+    )
+
+
+def triangle_count_adjacency(
+    edges: DataFrame, pre_symmetrized: bool = False
+) -> int:
+    """Global exact triangle count: per oriented edge (u, v),
+    |succ(u) ∩ succ(v)| summed — the sorted-array-intersection formulation
+    (SURVEY §2.6), expressed with JVM-side ``array_intersect`` (no wedge
+    materialization, no Python). ``pre_symmetrized`` as in ``_oriented``."""
+    with _oriented_adjacency(edges, pre_symmetrized) as per_edge:
         row = (
-            w.join(closing, ["a", "c"])
-            .agg(F.sum("wc").alias("total"))
+            per_edge.select(F.size(F.array_intersect("su", "sv")).alias("t"))
+            .agg(F.sum("t").alias("total"))
             .collect()[0]
         )
-        return int(row["total"] or 0)
-    finally:
-        o.unpersist()
+    return int(row["total"] or 0)
+
+
+def triangles_per_vertex(edges: DataFrame) -> DataFrame:
+    """``(id, triangles)`` — number of triangles each vertex participates in.
+    Vertices in no triangle are omitted (join against nodes to zero-fill).
+    The n-row result is checkpointed; nothing stays cached after the call."""
+    with _oriented_adjacency(edges) as per_edge:
+        return _corner_counts(per_edge).transform(checkpoint_state)
 
 
 def local_clustering_coefficient(edges: DataFrame) -> DataFrame:
     """``(id, lcc)`` over the symmetrized loop-free graph:
     lcc(v) = 2·T(v) / (d(v)·(d(v)−1)), 0 when d(v) < 2.
 
-    Reuses the degree-oriented triangle corners plus the undirected degree
-    table — both single aggregates over the one-shuffle symmetrized set.
-    Every node gets a row (zero-filled), matching the usual definition.
-
-    Both cached frames (the symmetrized set and the oriented set behind the
-    corners) are materialized EAGERLY before any multi-consumer action —
-    the concurrent-populate race the module's other docstrings describe —
-    and unpersisted after the n-row result is checkpointed, so repeated
-    invocations don't accumulate cached blocks.
+    Per-vertex triangle counts plus the undirected degree table — both
+    read the one persisted symmetrized set, which is materialized EAGERLY
+    (the concurrent-populate race ``_oriented_adjacency`` describes). Every
+    node gets a row (zero-filled), matching the usual definition. The
+    n-row result is checkpointed before the caches are released.
     """
-    from webgraph_spark.plans.iterate import checkpoint_state
-
-    spark = edges.sparkSession
-    p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    simple = (
-        edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .repartition(p, "src")
-        .dropDuplicates(["src", "dst"])
-        .persist()
-    )
-    simple.count()
-    o = _oriented(simple, pre_symmetrized=True).persist()
+    simple = _symmetric(edges).persist()
     try:
-        o.count()
+        simple.count()
         deg = simple.groupBy(F.col("src").alias("id")).agg(
             F.count(F.lit(1)).alias("deg")
         )
-        t = _triangle_corners(o)
-        corners = (
-            t.select(F.col("a").alias("id"))
-            .unionAll(t.select(F.col("b").alias("id")))
-            .unionAll(t.select(F.col("c").alias("id")))
-        )
-        tri = corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
-        out = (
-            deg.join(tri, "id", "left")
-            .select(
+        with _oriented_adjacency(simple, pre_symmetrized=True) as per_edge:
+            out = deg.join(_corner_counts(per_edge), "id", "left").select(
                 "id",
                 F.when(
                     F.col("deg") >= 2,
@@ -286,27 +202,15 @@ def local_clustering_coefficient(edges: DataFrame) -> DataFrame:
                 .otherwise(F.lit(0.0))
                 .alias("lcc"),
             )
-        )
-        return out.transform(checkpoint_state)
+            return out.transform(checkpoint_state)
     finally:
-        o.unpersist()
         simple.unpersist()
 
 
 def global_clustering_coefficient(edges: DataFrame) -> float:
     """Transitivity: 3·triangles / wedges, wedges = Σ_v d(v)·(d(v)−1)/2
     over the symmetrized loop-free graph. 0.0 on wedge-free graphs."""
-    spark = edges.sparkSession
-    p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    simple = (
-        edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .repartition(p, "src")
-        .dropDuplicates(["src", "dst"])
-        .persist()
-    )
+    simple = _symmetric(edges).persist()
     try:
         wedges_row = (
             simple.groupBy("src")
@@ -321,15 +225,3 @@ def global_clustering_coefficient(edges: DataFrame) -> float:
         return 3.0 * t / wedges
     finally:
         simple.unpersist()
-
-
-def triangles_per_vertex(edges: DataFrame) -> DataFrame:
-    """``(id, triangles)`` — number of triangles each vertex participates in.
-    Vertices in no triangle are omitted (join against nodes to zero-fill)."""
-    t = triangle_vertices(edges)
-    corners = (
-        t.select(F.col("a").alias("id"))
-        .unionAll(t.select(F.col("b").alias("id")))
-        .unionAll(t.select(F.col("c").alias("id")))
-    )
-    return corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
